@@ -423,7 +423,7 @@ _CERTIFIED_ROUND: dict[str, int] = {
 
 
 #: name -> round in which its implementation was last touched AFTER
-#: its then-latest green (rounds 12-13 optimization passes). A name
+#: its then-latest green (rounds 12-14 optimization passes). A name
 #: stays fronted until a CORRECTNESS artifact newer than the pinned
 #: round certifies it (then _CERTIFIED_ROUND exceeds the pin and the
 #: ordinary staleness rotation resumes). Hand-maintained; see
@@ -454,8 +454,23 @@ _RETOUCHED_AFTER_GREEN: dict[str, int] = {
     "ts14_leakage_free_split": 13,
     "g6_hits": 13,
     "ev7_rfm_segments": 13,
-    "x3_validation_summary": 13,
-    "q2_quality_report": 13,
+    # round-13 numpy/Arrow kernels (ivf_assign, rh_signature_bits,
+    # poly_hash) never oracle-sampled since
+    "td7_ivf_ann": 13,
+    "td21_ivfpq_topk": 13,
+    "td27_semantic_decontam_ivf": 13,
+    "td16_rh_lsh_pairs": 13,
+    "td23_minhash_est_pairs": 13,
+    # round-14 touched (category cascade as a lazy pandas-UDF kernel)
+    "a12_mapping_methods": 14,
+    "p1_ah_pipeline": 14,
+    "p2_jumbo_pipeline": 14,
+    "p3_aldi_pipeline": 14,
+    "p4_plus_pipeline": 14,
+    "p6_generic_kruidvat": 14,
+    "f5_incomplete_filter": 14,
+    "q2_quality_report": 14,
+    "x3_validation_summary": 14,
 }
 
 

@@ -3,28 +3,35 @@
 Re-expresses the reference's 7-step normalizer
 (ref: projects/processor/src/core/services/category/normalizer.ts:384-496
 cascade order; :530-552 fuzzy argmax; :498-528 ML-prediction mapping)
-Spark-first:
+Spark-first, as one lazy plan:
 
 - the string-only steps (exact / normalized / alias / containment /
-  fuzzy) are resolved ONCE per DISTINCT (category, shop) key — the
-  distinct key set is dimension-sized (the reference holds the same
-  tables as in-memory singleton maps, normalizer.ts:57-92), so the
-  cascade runs driver-side in Python and the result broadcast-joins
-  back to the fact rows.  This keeps the per-row plan free of
-  500-node literal expressions and is the 100 TB posture: fuzzy
-  matching cost is O(distinct keys × 191 patterns), never O(rows);
+  fuzzy) run in a scalar pandas UDF over (category, shop). Each Arrow
+  batch resolves its DISTINCT keys once against the constant tables
+  (the reference holds the same tables as in-memory singleton maps,
+  normalizer.ts:57-92) and fans the results out to its rows, so fuzzy
+  matching costs O(distinct keys per batch × finals), never O(rows ×
+  finals), and the per-row plan stays free of 500-node literal
+  expressions;
 - the ML step is an exact-title broadcast lookup against a
   predictions table (the reference precomputes title→prediction JSON,
-  X2), mapped onto the canon on the small side.
+  X2), its labels mapped onto the canon by a second pandas UDF.
+
+This module is pickled BY VALUE: Python workers cannot import the
+package when only the driver has the repo on its ``sys.path``.
 """
 
 from __future__ import annotations
 
 import re
+import sys
 from functools import lru_cache
 
+import pandas as pd  # module-level: pandas_udf type-hint resolution
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config.categories import (
     CATEGORY_ALIAS_PATTERNS,
@@ -32,6 +39,8 @@ from ..config.categories import (
     DEFAULT_CATEGORY,
     FINAL_CATEGORIES,
 )
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 ML_CONFIDENCE = 0.65
 ML_CONFIDENCE_SPECIAL = 0.4  # Aldi trots/aldi special case
@@ -103,8 +112,7 @@ def _static_match(cat: str) -> str | None:
     return None
 
 
-@lru_cache(maxsize=65536)
-def resolve_static(cat: str, shop: str) -> tuple[str | None, bool, str, bool]:
+def _resolve(cat: str, shop: str) -> tuple[str | None, bool, str, bool]:
     """(static_result, is_aldi_special, fuzzy_result, is_empty) for
     one distinct key."""
     if not cat or not cat.strip():
@@ -112,6 +120,11 @@ def resolve_static(cat: str, shop: str) -> tuple[str | None, bool, str, bool]:
     norm = _norm(cat)
     special = shop == "ALDI" and ("trots" in norm or "aldi" in norm)
     return _static_match(cat), special, _fuzzy_best(norm), False
+
+
+# driver-side memo; the UDFs call the bare _resolve because an
+# lru_cache wrapper pickles by reference, not by value
+resolve_static = lru_cache(maxsize=65536)(_resolve)
 
 
 def to_final_category(cat: str) -> str:
@@ -151,6 +164,31 @@ def normalize_category(title: str | None, cat: str | None, shop: str,
     return fuzzy
 
 
+_CASCADE = T.StructType(
+    [
+        T.StructField("static", T.StringType()),
+        T.StructField("special", T.BooleanType()),
+        T.StructField("fuzzy", T.StringType()),
+        T.StructField("empty", T.BooleanType()),
+    ]
+)
+
+
+@F.pandas_udf(_CASCADE)
+def _cascade_udf(cat: pd.Series, shop: pd.Series) -> pd.DataFrame:
+    """Steps 1–5 per Arrow batch: each distinct (category, shop) key is
+    resolved once and fanned out to its rows."""
+    keys = list(zip(cat.fillna(""), shop))
+    hits = {k: _resolve(*k) for k in set(keys)}
+    return pd.DataFrame([hits[k] for k in keys], columns=_CASCADE.fieldNames())
+
+
+@F.pandas_udf(T.StringType())
+def _canon_udf(label: pd.Series) -> pd.Series:
+    """Predicted labels onto the canon, once per distinct label."""
+    return label.map({lbl: to_final_category(lbl) for lbl in label.unique()})
+
+
 def normalize_categories(
     df: DataFrame,
     category_col: str = "main_category",
@@ -159,104 +197,45 @@ def normalize_categories(
     predictions: DataFrame | None = None,
     output_col: str | None = None,
     method_col: str | None = None,
-    broadcast_predictions: bool = True,
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Attach the normalized category column (default: overwrite
     `category_col`).
 
-    Collects the DISTINCT (category, shop) keys (dimension-sized),
-    resolves the cascade in Python, and broadcast-joins the mapping
-    back — the fact side never shuffles.
-
-    The distinct-key collect is an EAGER action over ``df``; without
-    ``materialize_input`` the upstream plan (for the shop pipelines:
-    from_json + the whole transform cascade) would execute twice —
-    once here, once when the result is consumed. The default persist
-    (MEMORY_AND_DISK, batch-slice-sized — the reference processes
-    bounded job slices too) makes the collect the single
-    materialization pass. Pass ``False`` for inputs that are already
-    cached or trivially cheap to recompute.
+    Lazy: the string steps are one pandas-UDF projection over
+    (category, shop) and the ML step one title-keyed broadcast join of
+    ``predictions`` (title, category, confidence); no Spark job runs
+    until the result is consumed.
 
     ``method_col`` additionally emits which cascade step resolved each
     row — static/ml/special/fuzzy/default — mirroring the reference's
     mapping-method stats (A12, ref: normalizer.ts:577-580,55-63).
     """
-    from pyspark import StorageLevel
-
-    spark = df.sparkSession
     output_col = output_col or category_col
-    if materialize_input:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    out = df.withColumn("_cascade", _cascade_udf(F.col(category_col), F.col(shop_col)))
+    static, special = F.col("_cascade.static"), F.col("_cascade.special")
+    fuzzy, empty = F.col("_cascade.fuzzy"), F.col("_cascade.empty")
 
-    keys = [
-        (r[0] or "", r[1])
-        for r in df.select(
-            F.coalesce(F.col(category_col), F.lit("")), F.col(shop_col)
-        ).distinct().collect()
-    ]
-    resolved_rows = []
-    for cat, shop in keys:
-        static, special, fuzzy, empty = resolve_static(cat, shop)
-        resolved_rows.append((cat, shop, static, special, fuzzy, empty))
-    resolved = spark.createDataFrame(
-        resolved_rows,
-        "_cat_key string, _shop_key string, _static string, _special boolean, "
-        "_fuzzy string, _empty boolean",
-    )
-
-    left = df.withColumns(
-        {
-            "_cat_key": F.coalesce(F.col(category_col), F.lit("")),
-            "_shop_key": F.col(shop_col),
-        }
-    )
-    out = left.join(
-        F.broadcast(resolved), on=["_cat_key", "_shop_key"], how="left"
-    )
-
+    drop = ["_cascade"]
     if predictions is not None:
-        # The title-keyed predictions table stays DISTRIBUTED (it is
-        # row-scaled — millions at 100 TB). Only its DISTINCT label
-        # set (bounded by the model's label space) is collected to
-        # resolve label→canon in Python; that tiny map broadcast-joins
-        # onto predictions. The reference instead loads the whole
-        # title→prediction JSON in memory (prediction.ts:30-35) —
-        # fine single-node, wrong shape at scale.
-        labels = [
-            r[0] or ""
-            for r in predictions.select(F.col("category")).distinct().collect()
-        ]
-        canon = spark.createDataFrame(
-            [(lbl, to_final_category(lbl)) for lbl in labels],
-            "_pred_cat string, _pred_final string",
+        preds = predictions.select(
+            F.col("title").alias("_pred_title"),
+            _canon_udf(F.coalesce(F.col("category"), F.lit(""))).alias("_pred_final"),
+            F.col("confidence").cast("double").alias("_pred_conf"),
         )
-        preds = (
-            predictions.select(
-                F.col("title").alias("_pred_title"),
-                F.coalesce(F.col("category"), F.lit("")).alias("_pred_cat"),
-                F.col("confidence").cast("double").alias("_pred_conf"),
-            )
-            .join(F.broadcast(canon), "_pred_cat")
-            .drop("_pred_cat")
-        )
-        # Broadcast the prediction side only when the caller says it
-        # fits (default: reference-sized dim table). At scale, leave
-        # it to AQE / a bucketed shuffle join on title.
-        side = F.broadcast(preds) if broadcast_predictions else preds
-        out = out.join(side, out[title_col] == F.col("_pred_title"), "left")
+        out = out.join(F.broadcast(preds), out[title_col] == F.col("_pred_title"), "left")
         ml_65 = F.when(F.col("_pred_conf") >= ML_CONFIDENCE, F.col("_pred_final"))
         ml_40 = F.when(F.col("_pred_conf") >= ML_CONFIDENCE_SPECIAL, F.col("_pred_final"))
+        drop += ["_pred_title", "_pred_final", "_pred_conf"]
     else:
         ml_65 = F.lit(None).cast("string")
         ml_40 = F.lit(None).cast("string")
 
-    final = F.when(F.col("_empty"), F.coalesce(ml_65, F.lit(DEFAULT_CATEGORY))).otherwise(
+    final = F.when(empty, F.coalesce(ml_65, F.lit(DEFAULT_CATEGORY))).otherwise(
         F.coalesce(
-            F.col("_static"),
-            F.when(F.col("_special"), F.coalesce(ml_40, F.lit(DEFAULT_CATEGORY))),
+            static,
+            F.when(special, F.coalesce(ml_40, F.lit(DEFAULT_CATEGORY))),
             ml_65,
-            F.col("_fuzzy"),
+            fuzzy,
         )
     )
     out = out.withColumn(output_col, final)
@@ -265,13 +244,10 @@ def normalize_categories(
         ml40_hit = ml_40.isNotNull()
         out = out.withColumn(
             method_col,
-            F.when(F.col("_empty"), F.when(ml65_hit, "ml").otherwise("default"))
-            .when(F.col("_static").isNotNull(), "static")
-            .when(F.col("_special"), F.when(ml40_hit, "ml").otherwise("special_default"))
+            F.when(empty, F.when(ml65_hit, "ml").otherwise("default"))
+            .when(static.isNotNull(), "static")
+            .when(special, F.when(ml40_hit, "ml").otherwise("special_default"))
             .when(ml65_hit, "ml")
             .otherwise("fuzzy"),
         )
-    drop = ["_cat_key", "_shop_key", "_static", "_special", "_fuzzy", "_empty"]
-    if predictions is not None:
-        drop += ["_pred_title", "_pred_final", "_pred_conf"]
     return out.drop(*drop)

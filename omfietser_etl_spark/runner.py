@@ -75,26 +75,30 @@ def run_file_mode(
         else:
             good, corrupt = read_shop_json(spark, path, shop)
             unified, errors = PIPELINES[shop](good, predictions=predictions)
-        unified.write.mode("overwrite").parquet(
-            os.path.join(output_dir, "unified", shop)
-        )
-        # Count the error rows on the SAME job that writes them
-        # (Observation rides the write) — a separate errors.count()
+        # Count the unified and error rows on the SAME jobs that write
+        # them (Observations ride the writes) — a separate count()
         # re-executed the whole scan→transform→split lineage per shop
         # (review round-6 finding; sinks/audit.py is the same pattern).
+        unified_obs = Observation()
+        unified.observe(unified_obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(output_dir, "unified", shop))
+        n_unified = int(unified_obs.get["n"])
         err_obs = Observation()
         write_errors(
             errors.observe(err_obs, F.count(F.lit(1)).alias("n")),
             os.path.join(output_dir, "errors"),
         )
         n_errors = int(err_obs.get["n"])
-        unified_back = spark.read.parquet(os.path.join(output_dir, "unified", shop))
         report = (
-            write_reports(unified_back, os.path.join(output_dir, "reports"), shop)
+            write_reports(
+                spark.read.parquet(os.path.join(output_dir, "unified", shop)),
+                os.path.join(output_dir, "reports"),
+                shop,
+            )
             if write_reports_flag
             else {}
         )
-        n_unified = unified_back.count()
         n_corrupt = corrupt.count()
         if write_reports_flag:
             # reference-shaped stats report (base.ts:669-705): run_ts

@@ -1,8 +1,8 @@
 """Property-based test of the category cascade: the distributed
-implementation (distinct-key resolve + broadcast joins + when-chain,
-operators/category.py::normalize_categories) must agree row-for-row
-with the scalar Python cascade (normalize_category) that states the
-reference semantics directly (normalizer.ts:384-552)."""
+implementation (per-batch pandas-UDF resolve + broadcast join +
+when-chain, operators/category.py::normalize_categories) must agree
+row-for-row with the scalar Python cascade (normalize_category) that
+states the reference semantics directly (normalizer.ts:384-552)."""
 
 from __future__ import annotations
 
@@ -69,9 +69,7 @@ def test_distributed_cascade_matches_scalar_model(spark, rows):
     )
     out = {
         r.i: r.main_category
-        for r in normalize_categories(
-            df, predictions=preds_df, materialize_input=False
-        ).collect()
+        for r in normalize_categories(df, predictions=preds_df).collect()
     }
     pred_by_title = {t: (c, f) for t, c, f in preds}
     for i, (cat, shop, has_pred, conf, pred_cat) in enumerate(rows):

@@ -465,10 +465,13 @@ def test_pq_rerank_fetch_is_broadcast(spark):
 
 
 def test_cluster_assignment_has_no_window_exchange(spark):
-    """Nearest-centroid assignment (td7/td8/td13/td21/ts17) must be a
-    groupBy argmin/argmax — partial aggregation collapses the N×C
-    joined frame map-side, so the exchange carries N rows. A
-    row_number window here would shuffle AND sort all N×C rows."""
+    """Nearest-centroid assignment (td7/td8/td13/td21/ts17) must never
+    rank the N×C joined frame with a row_number window, which would
+    shuffle AND sort all N×C rows. ``assign_clusters`` is a groupBy
+    argmin whose partial aggregation collapses the joined frame
+    map-side, so the exchange carries N rows; ``ivf_assign`` scores
+    each Arrow batch against the shipped codebook in one MapInPandas,
+    with no join or exchange at all."""
     import re
 
     from pyspark.sql import functions as F
@@ -480,19 +483,22 @@ def test_cluster_assignment_has_no_window_exchange(spark):
     emb = load(spark, SF_SMOKE, "embeddings")
     cent = emb.limit(8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    for df in (
-        assign_clusters(emb, cent, "vec_id", "embedding", "cid", "cv"),
-        ivf_assign(emb, emb.filter(F.col("vec_id") % 25 == 0),
-                   "vec_id", "embedding"),
-    ):
-        plan = _plan(df)
-        nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
-        assert "Window" not in nodes
-        # min(struct(..., array)) plans as SortAggregate (struct with an
-        # array field has no mutable hash buffer); the property under
-        # test is the MAP-SIDE partial min before the vid exchange.
-        assert "partial_min" in plan
-        assert "SortMergeJoin" not in nodes
+
+    plan = _plan(assign_clusters(emb, cent, "vec_id", "embedding", "cid", "cv"))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert "Window" not in nodes
+    # min(struct(..., array)) plans as SortAggregate (struct with an
+    # array field has no mutable hash buffer); the property under
+    # test is the MAP-SIDE partial min before the vid exchange.
+    assert "partial_min" in plan
+    assert "SortMergeJoin" not in nodes
+
+    plan = _plan(ivf_assign(emb, emb.filter(F.col("vec_id") % 25 == 0),
+                            "vec_id", "embedding"))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert "MapInPandas" in nodes
+    for node in ("Window", "Exchange", "SortMergeJoin"):
+        assert node not in nodes
 
 
 def _plan_blocks(plan: str) -> dict[int, tuple[str, str]]:
