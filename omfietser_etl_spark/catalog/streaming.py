@@ -932,7 +932,7 @@ ST12_BATCHES = 4
 
 def st12_merge_state(spark: SparkSession, sf: str) -> DataFrame:
     """K2/K3 sequential-MERGE end state (streaming/incremental.py::
-    merge_batch → _merge_parquet; reference semantics
+    merge_batch, the store's one merge core; reference semantics
     postgres-adapter.ts:637-788): four deterministic micro-batches of
     per-customer order summaries merge latest-wins into the versioned
     parquet state store (real version dirs, manifest swaps, GC), and

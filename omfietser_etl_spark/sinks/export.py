@@ -18,8 +18,8 @@ the input lineage that could silently diverge from them.
 
 Atomicity: every export lands in a fresh ``v_<n>`` subdirectory and
 a root-level ``_CURRENT`` pointer flips to it with write-tmp + fsync
-+ atomic rename (the parquet state store discipline in
-`streaming/incremental.py`). Concurrent readers resolving through
++ atomic rename (`streaming/incremental.py::atomic_write`, the parquet
+state store's commit primitive). Concurrent readers resolving through
 ``_CURRENT`` see either the previous complete export or the new one;
 a version directory without a committed pointer is invisible. The
 previous version is retained for in-flight readers; older ones are
@@ -36,38 +36,16 @@ import json
 import os
 import re
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.incremental import atomic_write
 from ..textops.sampling import shuffle_order
 
 MANIFEST_NAME = "_MANIFEST.json"
 CURRENT_NAME = "_CURRENT"
 _VERSION_RE = re.compile(r"^v_(\d{8})$")
-
-
-def _atomic_write(path: str, data: str) -> None:
-    # The tmp name must be unique PER WRITER: with a fixed `path + ".tmp"`
-    # two concurrent committers interleave on the same tmp file — one
-    # renames the other's tmp away (FileNotFoundError on the loser) and
-    # the surviving _CURRENT can carry the wrong writer's bytes. Found
-    # by the two-process race test (round 7); pid+uuid keeps the
-    # write-tmp + fsync + atomic-rename protocol truly last-wins.
-    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    try:
-        with open(tmp, "w") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):  # only on a failed replace
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
 
 
 def _versions(path: str) -> list[int]:
@@ -172,8 +150,8 @@ def write_training_shards(
     if token_count_col is not None:
         manifest["total_tokens"] = sum(e["tokens"] for e in shards.values())
 
-    _atomic_write(os.path.join(vdir, MANIFEST_NAME), json.dumps(manifest, sort_keys=True))
-    _atomic_write(os.path.join(path, CURRENT_NAME), vname)
+    atomic_write(os.path.join(vdir, MANIFEST_NAME), json.dumps(manifest, sort_keys=True))
+    atomic_write(os.path.join(path, CURRENT_NAME), vname)
 
     # Retention: current + (keep_versions - 1) predecessors survive so
     # readers mid-flight on the previous export finish cleanly.

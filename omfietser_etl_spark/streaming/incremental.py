@@ -15,11 +15,13 @@ Spark mapping:
   incremental listing; ``maxFilesPerTrigger`` bounds a micro-batch
   like the reference's LIMIT 10000 job slices),
 - upsert state → ``foreachBatch`` + MERGE. With Delta unavailable in
-  this container, the merge is a parquet-backed read-union-dedupe-
-  rewrite partitioned by ``shop_type``; on a real cluster swap
-  ``_merge_parquet`` for ``DeltaTable.merge`` and the call sites
-  don't change. Partition pruning on shop_type + key bucketing keeps
-  the rewrite bounded at scale (SURVEY §7.7 risk 5).
+  this container, ``merge_batch`` is a parquet-backed read-union-
+  dedupe-rewrite partitioned by ``shop_type``; on a real cluster swap
+  its body for ``DeltaTable.merge`` and the call sites don't change.
+  Partition pruning on shop_type bounds the rewrite to the shops a
+  batch touches (SURVEY §7.7 risk 5). Key bucketing is NOT
+  implemented: each touched shop partition is rewritten whole (see
+  ROADMAP.md, "One merge core that rewrites only what changed").
 - change detection → xxhash64 content hash compared against current
   state (ST4) — unchanged rows never rewrite state,
 - watermark + tumbling windows over late events (ST6) for the
@@ -28,9 +30,12 @@ Spark mapping:
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import content_hash
@@ -76,8 +81,6 @@ _MANIFEST = "_CURRENT"
 
 
 def _read_manifest(state_dir: str) -> dict | None:
-    import json
-
     path = os.path.join(state_dir, _MANIFEST)
     if not os.path.isfile(path):
         return None
@@ -85,28 +88,23 @@ def _read_manifest(state_dir: str) -> dict | None:
         return json.load(f)
 
 
-def _commit_manifest(state_dir: str, manifest: dict) -> None:
-    """Atomic pointer swap: write-fsync a temp file, os.replace() it
-    onto _CURRENT. Readers see the old manifest or the new one, never
-    a torn write. The tmp name is per-writer-unique (pid+uuid): a
-    FIXED tmp name lets two concurrent committers interleave on the
-    same tmp file — one renames the other's tmp away and the surviving
-    pointer can carry the wrong writer's bytes (the export-sink race
-    test caught exactly this, round 7). The state store is
-    single-writer by contract, but the commit primitive should not be
-    the thing that breaks when the contract is."""
-    import json
-    import uuid
-
-    tmp = os.path.join(
-        state_dir, f".{_MANIFEST}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    )
+def atomic_write(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` atomically: write-fsync a temp file
+    beside it, then os.replace() it onto ``path``. Readers see the old
+    content or the new one, never a torn write. The tmp name is
+    per-writer-unique (pid+uuid): a FIXED tmp name lets two concurrent
+    committers interleave on the same tmp file — one renames the
+    other's tmp away and the surviving file can carry the wrong
+    writer's bytes (tests/test_export.py's two-process race). The
+    state store's ``_CURRENT`` and the export sink's pointers both
+    commit through here."""
+    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     try:
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            f.write(text)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(state_dir, _MANIFEST))
+        os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):  # only on a failed replace
             try:
@@ -124,8 +122,6 @@ def _gc_versions(state_dir: str, manifest: dict) -> None:
     still be scanning its files (single-writer ≠ zero-reader); it is
     collected by the next merge's GC, by which point any such scan
     has long finished — the export sink's keep_versions=2 contract."""
-    import shutil
-
     live = set(manifest["partitions"].values())
     grace = {f"v{manifest['version'] - 1}"}
     for name in os.listdir(state_dir):
@@ -138,16 +134,25 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
 
     Partitioned states are stitched from the per-partition version
     pointers; each partition path is read directly (5 shops — the
-    stitch is a trivial union) with the partition column restored."""
+    stitch is a trivial union) with the partition column restored.
+
+    A dir holding data files but no manifest was not written by this
+    store: ValueError, rather than reading files no manifest vouches
+    for or reporting the store empty (the next commit would then
+    orphan those rows). Bare ``v<N>`` dirs without a manifest are a
+    crashed first merge and read as empty."""
     m = _read_manifest(state_dir)
     if m is None:
-        # legacy layout (pre-versioned store): bare parquet under the
-        # state dir — read it directly so existing stores keep working;
-        # the next merge rewrites them into the versioned layout.
-        if os.path.isdir(state_dir) and any(
-            not f.startswith(("_", ".", "v")) for f in os.listdir(state_dir)
-        ):
-            return spark.read.parquet(state_dir)
+        names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
+        stray = [
+            n for n in names
+            if not n.startswith(("_", ".")) and not (n[:1] == "v" and n[1:].isdigit())
+        ]
+        if stray:
+            raise ValueError(
+                f"state dir {state_dir!r} holds {sorted(stray)} but no "
+                f"{_MANIFEST} manifest; it is not a versioned state store"
+            )
         return None
     parts = m["partitions"]
     if set(parts) == {""}:
@@ -158,79 +163,6 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
         df = spark.read.parquet(p).withColumn("shop_type", F.lit(shop))
         out = df if out is None else out.unionByName(df)
     return out
-
-
-def _merge_parquet(
-    batch: DataFrame,
-    state_dir: str,
-    keys: list[str],
-    order_col: str,
-) -> None:
-    """MERGE INTO state USING batch ON keys — parquet-backed, with a
-    crash-safe versioned commit (see module-section comment above).
-
-    Latest row per key wins (ties → batch row). Only partitions
-    (shop_type values) present in the batch are rewritten — the
-    pruning a Delta MERGE would get from partition filters; untouched
-    partitions keep their old version pointers, so the manifest swap
-    is the ONLY globally visible step.
-    """
-    spark = batch.sparkSession
-    os.makedirs(state_dir, exist_ok=True)
-    manifest = _read_manifest(state_dir)
-    version = (manifest["version"] + 1) if manifest else 1
-    vdir = f"v{version}"
-
-    partitioned = "shop_type" in keys
-    shops = (
-        [r[0] for r in batch.select("shop_type").distinct().collect()]
-        if partitioned
-        else []
-    )
-
-    batch = batch.withColumn("_src", F.lit(1))
-    state = read_state(spark, state_dir)
-    # Legacy (pre-versioned) stores have no manifest: the first
-    # versioned merge must carry EVERY legacy partition into v1, not
-    # just the ones the batch touches — old_parts below is empty for
-    # them, so a filtered rewrite would orphan the absent shops'
-    # rows forever (the manifest, once committed, disables the legacy
-    # read fallback).
-    legacy_migration = partitioned and manifest is None and state is not None
-    if legacy_migration:
-        shops = sorted(
-            set(shops)
-            | {r[0] for r in state.select("shop_type").distinct().collect()}
-        )
-    if state is not None:
-        state = state.withColumn("_src", F.lit(0))
-        if partitioned:
-            state = state.filter(F.col("shop_type").isin(shops))
-        merged = state.unionByName(batch, allowMissingColumns=True)
-    else:
-        merged = batch
-    w = (
-        "row_number() OVER (PARTITION BY "
-        + ", ".join(keys)
-        + f" ORDER BY {order_col} DESC, _src DESC)"
-    )
-    latest = (
-        merged.withColumn("_rn", F.expr(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    writer = latest.write.mode("overwrite")
-    if partitioned:
-        writer = writer.partitionBy("shop_type")
-    writer.parquet(os.path.join(state_dir, vdir))
-
-    old_parts = manifest["partitions"] if manifest else {}
-    new_parts = (
-        {**old_parts, **{s: vdir for s in shops}} if partitioned else {"": vdir}
-    )
-    new_manifest = {"version": version, "partitions": new_parts}
-    _commit_manifest(state_dir, new_manifest)
-    _gc_versions(state_dir, new_manifest)
 
 
 def skip_unchanged(batch: DataFrame, state_dir: str, keys: list[str]) -> DataFrame:
@@ -263,8 +195,64 @@ def merge_batch(
     without the stream wrapper). Determinism contract for oracle-gated
     use: at most ONE row per key per batch (the tie order among
     same-key same-``order_col`` rows WITHIN a batch is unspecified,
-    exactly like SQL MERGE's multiple-matched-rows error case)."""
-    _merge_parquet(batch, state_dir, keys, order_col)
+    exactly like SQL MERGE's multiple-matched-rows error case).
+
+    Crash-safe versioned commit (see the module-section comment
+    above). Only partitions (shop_type values) present in the batch
+    are rewritten — the pruning a Delta MERGE would get from
+    partition filters; untouched partitions keep their old version
+    pointers, so the manifest swap is the ONLY globally visible step.
+    A null or empty shop_type has no partition path the manifest
+    could name: such a batch raises ValueError before anything is
+    written."""
+    spark = batch.sparkSession
+    os.makedirs(state_dir, exist_ok=True)
+    manifest = _read_manifest(state_dir)
+    version = (manifest["version"] + 1) if manifest else 1
+    vdir = f"v{version}"
+
+    partitioned = "shop_type" in keys
+    shops = (
+        [r[0] for r in batch.select("shop_type").distinct().collect()]
+        if partitioned
+        else []
+    )
+    if any(s in (None, "") for s in shops):
+        raise ValueError(
+            f"batch for {state_dir!r} has a null or empty shop_type"
+        )
+
+    batch = batch.withColumn("_src", F.lit(1))
+    state = read_state(spark, state_dir)
+    if state is not None:
+        state = state.withColumn("_src", F.lit(0))
+        if partitioned:
+            state = state.filter(F.col("shop_type").isin(shops))
+        merged = state.unionByName(batch, allowMissingColumns=True)
+    else:
+        merged = batch
+    w = (
+        "row_number() OVER (PARTITION BY "
+        + ", ".join(keys)
+        + f" ORDER BY {order_col} DESC, _src DESC)"
+    )
+    latest = (
+        merged.withColumn("_rn", F.expr(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_src")
+    )
+    writer = latest.write.mode("overwrite")
+    if partitioned:
+        writer = writer.partitionBy("shop_type")
+    writer.parquet(os.path.join(state_dir, vdir))
+
+    old_parts = manifest["partitions"] if manifest else {}
+    new_parts = (
+        {**old_parts, **{s: vdir for s in shops}} if partitioned else {"": vdir}
+    )
+    new_manifest = {"version": version, "partitions": new_parts}
+    atomic_write(os.path.join(state_dir, _MANIFEST), json.dumps(new_manifest))
+    _gc_versions(state_dir, new_manifest)
 
 
 def upsert_stream(
@@ -305,7 +293,7 @@ def upsert_stream(
                 return
         if batch.isEmpty():
             return
-        _merge_parquet(batch, state_dir, keys, order_col)
+        merge_batch(batch, state_dir, keys, order_col)
 
     return (
         stream.writeStream.foreachBatch(handle)
@@ -391,8 +379,6 @@ def idempotent_foreach_batch(handle, ledger_dir: str):
     with the checkpoint. Delta/Iceberg users get this from
     txnAppId/txnVersion instead; call sites unchanged.
     """
-    import os
-
     os.makedirs(ledger_dir, exist_ok=True)
 
     def wrapped(batch: DataFrame, epoch_id: int) -> None:
@@ -404,95 +390,6 @@ def idempotent_foreach_batch(handle, ledger_dir: str):
             f.write("")
 
     return wrapped
-
-
-def merge_into_bucketed_state(
-    batch: DataFrame,
-    table: str,
-    keys: list[str],
-    order_col: str,
-    n_buckets: int = 16,
-) -> None:
-    """ST3/K3 scale path: latest-wins MERGE against a BUCKETED state
-    table (SURVEY §7.7 risk 5 — "MERGE on 100 TB needs partition
-    pruning + key bucketing; avoid full-state rewrites").
-
-    The state table is ``bucketBy(keys)`` + ``sortBy(keys)``, so the
-    merge join reads state already hash-distributed AND sorted on the
-    merge key: the SortMergeJoin needs **no Exchange and no Sort on
-    the state side** (asserted in tests via explain). Only the
-    incoming batch — orders of magnitude smaller — shuffles. Compare
-    ``_merge_parquet``, which re-shuffles state ∪ batch every merge.
-
-    The batch is first reduced to one winner per key (a shuffle of
-    batch-sized data), then FULL OUTER joined with state; per key the
-    newer row wins (ties → batch). The rewrite here is whole-table
-    ``saveAsTable`` for portability; on Delta/Iceberg the same join
-    becomes the MERGE condition and rewrites only matched files.
-    """
-    spark = batch.sparkSession
-    key_cols = [F.col(k) for k in keys]
-
-    # Crash recovery for the rename-swap below: a die between
-    # "current → __prev" and "__next → current" leaves no live table
-    # but a complete __prev — restore it before merging (the batch
-    # that was mid-commit is redelivered by the at-least-once
-    # foreachBatch contract, so no data is lost either way).
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(
-        f"{table}__prev"
-    ):
-        spark.sql(f"ALTER TABLE {table}__prev RENAME TO {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__prev")  # stale residue
-
-    one_per_key = (
-        batch.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-    if spark.catalog.tableExists(table):
-        state = spark.table(table)
-        cols = state.columns
-        b = one_per_key.select(*cols)
-        joined = state.alias("s").join(b.alias("b"), on=keys, how="full_outer")
-        batch_wins = F.col(f"b.{order_col}").isNotNull() & (
-            F.col(f"s.{order_col}").isNull()
-            | (F.col(f"b.{order_col}") >= F.col(f"s.{order_col}"))
-        )
-        payload = [c for c in cols if c not in keys]
-        merged = joined.select(
-            *[F.col(k) for k in keys],
-            *[
-                F.when(batch_wins, F.col(f"b.{c}")).otherwise(F.col(f"s.{c}")).alias(c)
-                for c in payload
-            ],
-        ).select(*cols)
-    else:
-        merged = one_per_key
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}__next")  # crashed-run residue
-    (
-        merged.write.mode("overwrite")
-        .bucketBy(n_buckets, keys[0], *keys[1:])
-        .sortBy(keys[0], *keys[1:])
-        .format("parquet")
-        .saveAsTable(f"{table}__next")
-    )
-    # Rename-swap (metastore renames; Delta MERGE replaces this). The
-    # current table is parked as __prev rather than dropped so every
-    # crash point is recoverable: before the first rename → old state
-    # live; between the renames → recovery at next call restores
-    # __prev; after the second → new state live, __prev is residue
-    # dropped on the next call's entry sweep.
-    if spark.catalog.tableExists(table):
-        spark.sql(f"ALTER TABLE {table} RENAME TO {table}__prev")
-    spark.sql(f"ALTER TABLE {table}__next RENAME TO {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__prev")
 
 
 def session_window_stats(

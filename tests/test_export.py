@@ -202,19 +202,19 @@ def _race_writer(args):
     from omfietser_etl_spark.sinks.export import (
         CURRENT_NAME,
         MANIFEST_NAME,
-        _atomic_write,
         claim_version,
     )
+    from omfietser_etl_spark.streaming.incremental import atomic_write
 
     path, n, tag = args
     claimed = []
     for i in range(n):
         v, vdir = claim_version(path)
-        _atomic_write(
+        atomic_write(
             os.path.join(vdir, MANIFEST_NAME),
             json.dumps({"writer": tag, "seq": i, "version": v}),
         )
-        _atomic_write(os.path.join(path, CURRENT_NAME), os.path.basename(vdir))
+        atomic_write(os.path.join(path, CURRENT_NAME), os.path.basename(vdir))
         claimed.append(v)
     return tag, claimed
 
@@ -226,16 +226,13 @@ def _crashing_writer(args):
     import json
     import os
 
-    from omfietser_etl_spark.sinks.export import (
-        MANIFEST_NAME,
-        _atomic_write,
-        claim_version,
-    )
+    from omfietser_etl_spark.sinks.export import MANIFEST_NAME, claim_version
+    from omfietser_etl_spark.streaming.incremental import atomic_write
 
     path, die_after = args
     v, vdir = claim_version(path)
     if die_after >= 1:  # data+manifest written, _CURRENT flip never reached
-        _atomic_write(
+        atomic_write(
             os.path.join(vdir, MANIFEST_NAME),
             json.dumps({"writer": "crash", "version": v}),
         )

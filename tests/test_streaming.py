@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omfietser_etl_spark.streaming.incremental import (
+    merge_batch,
     read_landing_stream,
     read_state,
     session_window_stats,
@@ -111,38 +113,10 @@ def test_upsert_stream_latest_wins_and_skips_unchanged(spark, tmp_path):
     assert manifest["partitions"]["AH"] == "v2"
 
 
-def test_read_state_migrates_legacy_layout(spark, tmp_path):
-    """A state dir written by the pre-versioned store (bare parquet,
-    no manifest) must read as-is and be rewritten into the versioned
-    layout by the next merge."""
-    from omfietser_etl_spark.streaming.incremental import _merge_parquet
-
-    state = str(tmp_path / "state")
-    legacy = spark.createDataFrame(
-        [("AH", "1", 2.0, 100)],
-        "shop_type string, external_id string, current_price double, scraped_at long",
-    )
-    legacy.write.partitionBy("shop_type").parquet(state)  # old layout
-
-    got = {(r.shop_type, r.external_id) for r in read_state(spark, state).collect()}
-    assert got == {("AH", "1")}
-
-    batch = spark.createDataFrame(
-        [("AH", "2", 3.0, 200)],
-        "shop_type string, external_id string, current_price double, scraped_at long",
-    )
-    _merge_parquet(batch, state, ["shop_type", "external_id"], "scraped_at")
-    got = {(r.shop_type, r.external_id) for r in read_state(spark, state).collect()}
-    assert got == {("AH", "1"), ("AH", "2")}
-    assert os.path.isfile(os.path.join(state, "_CURRENT"))
-
-
 def test_merge_crash_before_commit_preserves_state(spark, tmp_path):
     """Kill-mid-merge: a merge that dies AFTER writing the new version
     dir but BEFORE the manifest swap must leave readers on the old
     complete state, and the next merge must succeed and converge."""
-    from omfietser_etl_spark.streaming.incremental import _merge_parquet
-
     state = str(tmp_path / "state")
     keys = ["shop_type", "external_id"]
 
@@ -151,7 +125,7 @@ def test_merge_crash_before_commit_preserves_state(spark, tmp_path):
         "shop_type string, external_id string, title string, "
         "current_price double, scraped_at long",
     )
-    _merge_parquet(b1, state, keys, "scraped_at")
+    merge_batch(b1, state, keys, "scraped_at")
 
     # Simulate the torn run: write the would-be v2 dir by hand (full
     # data present on disk!) without touching the manifest.
@@ -171,10 +145,67 @@ def test_merge_crash_before_commit_preserves_state(spark, tmp_path):
 
     # The retried merge (at-least-once redelivery) reuses version 2,
     # overwrites the residue, and commits atomically.
-    _merge_parquet(b2, state, keys, "scraped_at")
+    merge_batch(b2, state, keys, "scraped_at")
     got = {(r.shop_type, r.external_id): (r.current_price, r.scraped_at)
            for r in read_state(spark, state).collect()}
     assert got == {("AH", "1"): (9.9, 200)}
+
+
+def test_merge_rejects_null_or_empty_shop_type(spark, tmp_path):
+    """A null or empty shop_type has no partition path the manifest
+    could point at (Spark writes such rows under
+    __HIVE_DEFAULT_PARTITION__): the merge must refuse the batch before
+    writing, leaving the committed state readable and unchanged."""
+    state = str(tmp_path / "state")
+    keys = ["shop_type", "external_id"]
+    schema = "shop_type string, external_id string, current_price double, scraped_at long"
+    merge_batch(spark.createDataFrame([("AH", "1", 2.0, 100)], schema),
+                state, keys, "scraped_at")
+    with open(os.path.join(state, "_CURRENT")) as f:
+        before = json.load(f)
+
+    for bad in (None, ""):
+        batch = spark.createDataFrame([(bad, "2", 3.0, 200)], schema)
+        with pytest.raises(ValueError, match="shop_type"):
+            merge_batch(batch, state, keys, "scraped_at")
+
+    with open(os.path.join(state, "_CURRENT")) as f:
+        assert json.load(f) == before
+    got = {(r.shop_type, r.external_id): r.current_price
+           for r in read_state(spark, state).collect()}
+    assert got == {("AH", "1"): 2.0}
+
+
+def test_manifestless_state_dir_is_refused(spark, tmp_path):
+    """Partitioned parquet under a state dir with no _CURRENT manifest
+    was not written by the versioned store: reading it or merging into
+    it raises ValueError naming the dir, and the files stay as they
+    were (reading them, or treating the store as empty, would let the
+    next commit orphan those rows)."""
+    state = str(tmp_path / "state")
+    df = spark.createDataFrame(
+        [("AH", "1", 2.0, 100), ("JUMBO", "7", 4.0, 100)],
+        "shop_type string, external_id string, current_price double, scraped_at long",
+    )
+    df.write.partitionBy("shop_type").parquet(state)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), state),
+             os.path.getsize(os.path.join(d, f)))
+            for d, _, files in os.walk(state) for f in files
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match=re.escape(state)):
+        read_state(spark, state)
+    batch = spark.createDataFrame(
+        [("AH", "2", 3.0, 200)],
+        "shop_type string, external_id string, current_price double, scraped_at long",
+    )
+    with pytest.raises(ValueError, match=re.escape(state)):
+        merge_batch(batch, state, ["shop_type", "external_id"], "scraped_at")
+    assert listing() == before
 
 
 def test_content_hash_stable_and_sensitive(spark):
@@ -343,94 +374,6 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path, sf_dir):
     assert got == batch
 
 
-def test_merge_into_bucketed_state(spark, tmp_path):
-    from omfietser_etl_spark.streaming.incremental import merge_into_bucketed_state
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bstate LOCATION '{tmp_path}/bstate'")
-    table = "bstate.products"
-
-    b1 = spark.createDataFrame(
-        [("AH", "e1", 10, 1.0), ("AH", "e2", 10, 2.0), ("JUMBO", "e1", 10, 3.0)],
-        "shop_type string, external_id string, scraped_at int, price double",
-    )
-    merge_into_bucketed_state(b1, table, ["shop_type", "external_id"], "scraped_at")
-
-    # newer e1, older e2 (ignored), brand-new e3
-    b2 = spark.createDataFrame(
-        [("AH", "e1", 20, 9.0), ("AH", "e2", 5, 99.0), ("AH", "e3", 20, 4.0)],
-        "shop_type string, external_id string, scraped_at int, price double",
-    )
-    merge_into_bucketed_state(b2, table, ["shop_type", "external_id"], "scraped_at")
-
-    got = {
-        (r.shop_type, r.external_id): (r.scraped_at, r.price)
-        for r in spark.table(table).collect()
-    }
-    assert got == {
-        ("AH", "e1"): (20, 9.0),
-        ("AH", "e2"): (10, 2.0),
-        ("AH", "e3"): (20, 4.0),
-        ("JUMBO", "e1"): (10, 3.0),
-    }
-
-    # Crash window: die between "current → __prev" and "__next →
-    # current" leaves no live table but a complete __prev. The next
-    # merge call must restore it and apply the (redelivered) batch.
-    spark.sql(f"ALTER TABLE {table} RENAME TO {table}__prev")
-    assert not spark.catalog.tableExists(table)
-    b3 = spark.createDataFrame(
-        [("AH", "e1", 30, 7.7)],
-        "shop_type string, external_id string, scraped_at int, price double",
-    )
-    merge_into_bucketed_state(b3, table, ["shop_type", "external_id"], "scraped_at")
-    got = {
-        (r.shop_type, r.external_id): (r.scraped_at, r.price)
-        for r in spark.table(table).collect()
-    }
-    assert got[("AH", "e1")] == (30, 7.7)       # redelivered batch applied
-    assert got[("JUMBO", "e1")] == (10, 3.0)    # recovered pre-crash state
-    assert not spark.catalog.tableExists(f"{table}__prev")
-
-    # Scale property: the state side of the merge join is read bucketed —
-    # no Exchange between the state table scan and the join.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        state = spark.table(table)
-        probe = b2.withColumnsRenamed({"price": "p2"})
-        j = state.join(probe, ["shop_type", "external_id"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        # Exactly one Exchange in the join plan: the (small) batch
-        # side. The bucketed state side is read pre-hashed — no
-        # Exchange above its scan.
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_legacy_migration_preserves_absent_shops(spark, tmp_path):
-    """First versioned merge over a legacy store must carry EVERY
-    legacy partition into v1 — a batch touching only AH must not
-    orphan JUMBO's rows (once the manifest commits, the legacy read
-    fallback is disabled forever; review round-6 finding)."""
-    from omfietser_etl_spark.streaming.incremental import _merge_parquet
-
-    state = str(tmp_path / "state")
-    legacy = spark.createDataFrame(
-        [("AH", "1", 2.0, 100), ("JUMBO", "7", 4.0, 100)],
-        "shop_type string, external_id string, current_price double, scraped_at long",
-    )
-    legacy.write.partitionBy("shop_type").parquet(state)
-
-    batch = spark.createDataFrame(
-        [("AH", "2", 3.0, 200)],
-        "shop_type string, external_id string, current_price double, scraped_at long",
-    )
-    _merge_parquet(batch, state, ["shop_type", "external_id"], "scraped_at")
-    got = {(r.shop_type, r.external_id) for r in read_state(spark, state).collect()}
-    assert got == {("AH", "1"), ("AH", "2"), ("JUMBO", "7")}
-
-
 def test_late_older_changed_row_cannot_overwrite_newer_state(spark, tmp_path):
     """Out-of-order delivery: after a newer-but-unchanged observation
     advanced the stored order, a late older row with DIFFERENT content
@@ -491,13 +434,11 @@ def test_gc_retains_superseded_version_one_cycle(spark, tmp_path):
     """Reader grace: the immediately-superseded version dir survives
     one merge cycle (a reader that resolved the old manifest may
     still be scanning it) and is collected by the following merge."""
-    from omfietser_etl_spark.streaming.incremental import _merge_parquet
-
     state = str(tmp_path / "state")
     schema = "shop_type string, external_id string, current_price double, scraped_at long"
     for i, price in enumerate([1.0, 2.0, 3.0], start=1):
         batch = spark.createDataFrame([("AH", "1", price, i * 100)], schema)
-        _merge_parquet(batch, state, ["shop_type", "external_id"], "scraped_at")
+        merge_batch(batch, state, ["shop_type", "external_id"], "scraped_at")
         dirs = {d for d in os.listdir(state) if d.startswith("v")}
         if i == 2:
             assert dirs == {"v1", "v2"}  # v1 in grace
