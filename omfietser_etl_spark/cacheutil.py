@@ -209,20 +209,7 @@ def persist_replannable(scope: str, df: DataFrame) -> DataFrame:
     reads. Restore-before-return matters: queries later in the session
     whose cached frames carry a DELIBERATE partitioning (the CC loop's
     pre-partitioned edges — SCALING.md round 6) must not persist under
-    it.
-
-    A/B instrumentation (round-10 verdict #4): scopes listed in
-    ``SPARK_GRAFT_DISABLE_PERSIST_SCOPES`` (comma-separated) skip the
-    persist and return ``df`` unchanged — the duplicated-execution
-    plan the persist exists to prevent. Measurement-only: it lets the
-    10x sweep time each audit persist (ta12/ev1/mm7/mm8) against its
-    duplicated-scan alternative without a code branch per query.
-    Never set in production or under the gate."""
-    import os
-
-    disabled = os.environ.get("SPARK_GRAFT_DISABLE_PERSIST_SCOPES", "")
-    if scope in {s.strip() for s in disabled.split(",") if s.strip()}:
-        return df
+    it."""
     spark = df.sparkSession
     try:
         prev = spark.conf.get(_AQE_CACHED_KEY)

@@ -88,8 +88,8 @@ OPTIONAL_FIELDS = ["brand", "image_url", "main_category", "promotion_type"]
 
 
 def completeness_report(df: DataFrame) -> DataFrame:
-    """% non-null/non-empty per required+optional field (A2/A10
-    flavor) — one aggregate over the whole frame."""
+    """Per shop: % non-null/non-empty per required+optional field
+    (A2/A10 flavor), in basis points — one aggregate pass."""
     aggs = []
     for c in REQUIRED_FIELDS + OPTIONAL_FIELDS:
         present = F.col(c).isNotNull() & (F.col(c).cast("string") != "")
@@ -100,4 +100,4 @@ def completeness_report(df: DataFrame) -> DataFrame:
             .cast("long")
             .alias(f"{c}_bp")
         )
-    return df.agg(*aggs)
+    return df.groupBy("shop_type").agg(*aggs)

@@ -1,24 +1,27 @@
 """File-mode run orchestration (SURVEY §3.1): the reference's CLI
-lifecycle re-expressed as one Spark job per shop.
+lifecycle re-expressed as one declarative plan per shop plus one
+report pass over all shops.
 
 Ref: src/index.ts:150-412 — config/shops arg parsing, per-shop
 processor execution, per-shop + rollup summary counters (A1).
 
 Each shop is a single declarative DAG (scan → skip filter → transform
 → category cascade → enrich → dedupe/split → sinks) that Catalyst
-plans end-to-end; the per-shop loop is driver-side bookkeeping only.
+plans end-to-end; its writes carry their row counts as Observations.
+One read of all shops' unified output then feeds every report.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipelines import ah, aldi, generic, jumbo, plus
+from .schemas import UNIFIED_SCHEMA
 from .sinks.files import (
     write_errors,
     write_reports,
@@ -44,7 +47,6 @@ class ShopRunResult:
     n_unified: int
     n_errors: int
     n_corrupt: int
-    report: dict = field(default_factory=dict)
 
 
 def run_file_mode(
@@ -53,7 +55,6 @@ def run_file_mode(
     output_dir: str,
     shops: list[str] | None = None,
     predictions: DataFrame | None = None,
-    write_reports_flag: bool = True,
 ) -> dict:
     """Process every shop input file present in ``input_dir``.
 
@@ -90,53 +91,47 @@ def run_file_mode(
             os.path.join(output_dir, "errors"),
         )
         n_errors = int(err_obs.get["n"])
-        report = (
-            write_reports(
-                spark.read.parquet(os.path.join(output_dir, "unified", shop)),
-                os.path.join(output_dir, "reports"),
-                shop,
-            )
-            if write_reports_flag
-            else {}
-        )
         n_corrupt = corrupt.count()
-        if write_reports_flag:
-            # reference-shaped stats report (base.ts:669-705): run_ts
-            # keyed to the job epilogue, not the oracle gate, so wall
-            # clock is fine here
-            write_stats_report(
-                os.path.join(output_dir, "reports"),
-                shop,
-                total=n_unified + n_errors + n_corrupt,
-                success=n_unified,
-                failed=n_errors,
-                skipped=n_corrupt,
-                duration_s=time.perf_counter() - t0,
-                run_ts=time.strftime("%Y-%m-%dT%H:%M:%S"),
-            )
+        # reference-shaped stats report (base.ts:669-705): run_ts
+        # keyed to the job epilogue, not the oracle gate, so wall
+        # clock is fine here
+        write_stats_report(
+            os.path.join(output_dir, "reports"),
+            shop,
+            total=n_unified + n_errors + n_corrupt,
+            success=n_unified,
+            failed=n_errors,
+            skipped=n_corrupt,
+            duration_s=time.perf_counter() - t0,
+            run_ts=time.strftime("%Y-%m-%dT%H:%M:%S"),
+        )
         results.append(
             ShopRunResult(
                 shop=shop,
                 n_unified=n_unified,
                 n_errors=n_errors,
                 n_corrupt=n_corrupt,
-                report=report,
             )
         )
-    if write_reports_flag and results:
-        # cross-shop visualization artifacts (visualize-data.ts:11-95):
-        # four JSONs + report.html from the union of shop outputs
-        from .sinks.visualize import write_visualization
-
-        union = spark.read.parquet(
-            *[os.path.join(output_dir, "unified", r.shop) for r in results]
-        )
-        write_visualization(union, os.path.join(output_dir, "visualization"))
     # free the last shop's cached JSON parse (the per-shop scope only
     # releases on the NEXT call)
     from .cacheutil import release
 
     release("sources.read_shop_json")
+    if results:
+        # the known schema spares an inference job; the reports group
+        # by shop (visualization: visualize-data.ts:11-95)
+        from .sinks.visualize import write_visualization
+
+        unified = spark.read.schema(UNIFIED_SCHEMA).parquet(
+            *[os.path.join(output_dir, "unified", r.shop) for r in results]
+        )
+        write_reports(
+            unified,
+            os.path.join(output_dir, "reports"),
+            [r.shop for r in results],
+        )
+        write_visualization(unified, os.path.join(output_dir, "visualization"))
     return {
         "shops": {
             r.shop: {

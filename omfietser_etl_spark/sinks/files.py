@@ -71,20 +71,25 @@ def write_errors(errors: DataFrame, path: str) -> None:
     errors.write.mode("append").parquet(path)
 
 
-def write_reports(unified: DataFrame, out_dir: str, shop: str) -> dict:
-    """K6: quality + completeness reports (small collects by
-    construction — aggregates, not fact data)."""
+def write_reports(unified: DataFrame, out_dir: str, shops: list[str]) -> None:
+    """K6: every shop's quality + completeness report from one collect
+    of each, grouped by ``shop_type`` (small collects by construction —
+    aggregates, not fact data). A shop without unified rows gets an
+    empty quality list and null completeness figures."""
     os.makedirs(out_dir, exist_ok=True)
-    q = quality_report(unified).collect()
-    c = completeness_report(unified).first()
-    report = {
-        "shop": shop,
-        "quality": [r.asDict() for r in q],
-        "completeness_bp": c.asDict() if c else {},
-    }
-    with open(os.path.join(out_dir, f"{shop}_quality_report.json"), "w") as f:
-        json.dump(report, f, indent=2, sort_keys=True)
-    return report
+    quality = {r.shop_type: [r.asDict()] for r in quality_report(unified).collect()}
+    completeness = completeness_report(unified)
+    bp = {r.shop_type: r.asDict() for r in completeness.collect()}
+    for shop in shops:
+        c = bp.get(shop.upper(), dict.fromkeys(completeness.columns))
+        del c["shop_type"]
+        report = {
+            "shop": shop,
+            "quality": quality.get(shop.upper(), []),
+            "completeness_bp": c,
+        }
+        with open(os.path.join(out_dir, f"{shop}_quality_report.json"), "w") as f:
+            json.dump(report, f, indent=2, sort_keys=True)
 
 
 def write_stats_report(

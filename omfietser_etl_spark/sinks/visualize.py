@@ -39,8 +39,7 @@ def _or_default(col: str, default: str):
     return F.when(c.isNull() | (c == ""), F.lit(default)).otherwise(c)
 
 
-def category_distribution(unified: DataFrame) -> DataFrame:
-    total = unified.count()
+def category_distribution(unified: DataFrame, total: int) -> DataFrame:
     return (
         unified.groupBy(
             _or_default("main_category", "Uncategorized").alias("category")
@@ -49,7 +48,6 @@ def category_distribution(unified: DataFrame) -> DataFrame:
         .withColumn(
             "percentage", F.round(F.col("count") * 100.0 / F.lit(max(1, total)), 1)
         )
-        .orderBy(F.desc("count"), "category")
     )
 
 
@@ -74,7 +72,6 @@ def price_comparison(unified: DataFrame) -> DataFrame:
             F.sum(F.when((p >= 5) & (p < 10), 1).otherwise(0)).cast("long").alias("range5to10"),
             F.sum(F.when(p >= 10, 1).otherwise(0)).cast("long").alias("over10"),
         )
-        .orderBy("shop")
     )
 
 
@@ -111,12 +108,13 @@ def promotion_analysis(unified: DataFrame) -> DataFrame:
                 "promotionTypes", F.map_from_arrays(F.array(), F.array())
             ).alias("promotionTypes"),
         )
-        .orderBy("shop")
     )
 
 
-def _rows(df: DataFrame) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]
+def _rows(df: DataFrame, key) -> list[dict]:
+    """Collect a few-row aggregate, sorted on the driver (Python's
+    code-point string order is Spark's UTF-8 binary order)."""
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=key)
 
 
 def _table(rows: list[dict], cols: list[str]) -> str:
@@ -171,12 +169,16 @@ def write_visualization(unified: DataFrame, out_dir: str) -> dict:
     """Write the four visualization JSONs + report.html; returns the
     summary dict. Collects only bounded aggregates."""
     os.makedirs(out_dir, exist_ok=True)
-    category = _rows(category_distribution(unified))
-    price = _rows(price_comparison(unified))
-    promo = _rows(promotion_analysis(unified))
+    price = _rows(price_comparison(unified), key=lambda r: r["shop"])
     by_shop = {r["shop"]: r["count"] for r in price}
+    total = sum(by_shop.values())
+    category = _rows(
+        category_distribution(unified, total),
+        key=lambda r: (-r["count"], r["category"]),
+    )
+    promo = _rows(promotion_analysis(unified), key=lambda r: r["shop"])
     summary = {
-        "total": unified.count(),
+        "total": total,
         "byShop": by_shop,
         "categoryData": category,
         "priceData": price,

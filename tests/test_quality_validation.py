@@ -66,9 +66,17 @@ def test_quality_score_additive_and_capped(spark):
 
 
 def test_completeness_report(spark):
-    df = _df(spark, _row(), _row(brand=""))
-    r = completeness_report(df).first()
-    assert r.title_bp == 10000 and r.brand_bp == 5000
+    df = _df(
+        spark,
+        _row(), _row(brand=""),
+        _row(shop_type="JUMBO", brand=None, image_url=""),
+    )
+    r = {row.shop_type: row for row in completeness_report(df).collect()}
+    assert set(r) == {"AH", "JUMBO"}
+    assert r["AH"].title_bp == 10000 and r["AH"].brand_bp == 5000
+    assert r["AH"].image_url_bp == 10000
+    assert r["JUMBO"].title_bp == 10000 and r["JUMBO"].brand_bp == 0
+    assert r["JUMBO"].image_url_bp == 0
 
 
 def test_validation_rules_fire_individually(spark):

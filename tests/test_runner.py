@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omfietser_etl_spark.runner import run_file_mode
+from omfietser_etl_spark.schemas import UNIFIED_SCHEMA
 from omfietser_etl_spark.sources.files import read_shop_json
 
 JUMBO_ROWS = [
@@ -88,6 +89,64 @@ def test_run_file_mode_end_to_end(spark, tmp_path):
     assert sum(r["count"] for r in cats.values()) == 3
     html_text = open(os.path.join(viz, "report.html")).read()
     assert "Total products analyzed: 3" in html_text
+
+
+def test_run_file_mode_reads_its_output_once_with_a_schema(spark, tmp_path, monkeypatch):
+    """The report pass reads every shop's unified output back in ONE
+    parquet read with the known schema: no per-shop read-back and no
+    schema-inference job."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    orig_schema, orig_parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, s):
+        self._given_schema = s
+        return orig_schema(self, s)
+
+    def parquet(self, *paths, **options):
+        calls.append((paths, getattr(self, "_given_schema", None)))
+        return orig_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    _write_inputs(inp)
+    run_file_mode(spark, inp, out)
+    monkeypatch.undo()
+
+    assert len(calls) == 1
+    paths, given = calls[0]
+    assert given == UNIFIED_SCHEMA
+    assert sorted(os.path.basename(p) for p in paths) == ["ah", "jumbo"]
+
+
+def test_run_file_mode_zero_row_shop(spark, tmp_path):
+    """A shop whose every record is skipped still gets its reports:
+    an empty quality list and null completeness figures, and no entry
+    in the cross-shop summary."""
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    os.makedirs(inp)
+    with open(inp / "jumbo_products.json", "w") as f:
+        json.dump([JUMBO_ROWS[2]], f)  # J3: out of assortment → skipped
+    with open(inp / "ah_products.json", "w") as f:
+        json.dump(AH_ROWS, f)
+    summary = run_file_mode(spark, str(inp), out)
+    assert summary["shops"]["jumbo"]["unified"] == 0
+    assert summary["shops"]["ah"]["unified"] == 1
+
+    reports = os.path.join(out, "reports")
+    jumbo = json.load(open(os.path.join(reports, "jumbo_quality_report.json")))
+    ah = json.load(open(os.path.join(reports, "ah_quality_report.json")))
+    assert jumbo["shop"] == "jumbo" and jumbo["quality"] == []
+    assert set(jumbo["completeness_bp"]) == set(ah["completeness_bp"])
+    assert all(v is None for v in jumbo["completeness_bp"].values())
+    assert ah["quality"][0]["n_products"] == 1
+    assert ah["completeness_bp"]["title_bp"] == 10000
+
+    viz = json.load(open(os.path.join(out, "visualization", "summary.json")))
+    assert "JUMBO" not in viz["byShop"]
+    assert viz["total"] == sum(viz["byShop"].values()) == 1
 
 
 def test_corrupt_record_dead_letter(spark, tmp_path):
