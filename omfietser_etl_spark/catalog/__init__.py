@@ -471,10 +471,10 @@ _RETOUCHED_AFTER_GREEN: dict[str, int] = {
     "f5_incomplete_filter": 14,
     "q2_quality_report": 14,
     "x3_validation_summary": 14,
-    # round-15 touched (merge_batch is the one merge core; legacy-layout
-    # read and migration removed)
-    "st12_merge_state": 15,
-    "st13_merge_skip_unchanged": 15,
+    # round-16 touched (the state manifest carries the schema;
+    # read_state reads through it with no inference job)
+    "st12_merge_state": 16,
+    "st13_merge_skip_unchanged": 16,
 }
 
 

@@ -37,6 +37,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import content_hash
 
@@ -67,14 +68,26 @@ def with_content_hash(df: DataFrame, *cols: str) -> DataFrame:
 #          <state_dir>/v<N>/...            immutable version dirs
 #
 # The manifest maps each shop_type partition (or "" for unpartitioned
-# states) to the version dir holding its live data. A merge writes a
-# brand-new version dir, then commits by fsync+os.replace() of the
-# manifest — POSIX-atomic, so a crash at ANY point leaves readers on
-# the previous complete state (the reference's transactional
-# INSERT..ON CONFLICT guarantee, postgres-adapter.ts:637-788). Partial
-# version dirs from a crashed run are overwritten by the next merge
-# (same version number, mode=overwrite) and never referenced.
-# Single-writer per state_dir, like the job loop it models.
+# states) to the version dir holding its live data, and holds the
+# schema of the store's data files ("schema", StructType JSON, without
+# the partition column). Readers resolve the schema from the manifest
+# instead of inferring it from the files, the way Delta Lake and
+# Iceberg keep it in their commit logs: inference costs one Spark job
+# per partition path on every read, and partitions written in
+# different versions could disagree on their columns. The schema only
+# grows: a merge reads the state with the full schema, unions the batch
+# by name, and commits the union's schema, so partitions written
+# before a column existed read it as null. A column's type may not
+# change: the untouched partitions' files would not hold the new type,
+# so a batch that retypes one is refused before anything is written.
+# A merge writes a brand-new version dir, then commits by
+# fsync+os.replace() of the manifest — POSIX-atomic, so a crash at ANY
+# point leaves readers on the previous complete state (the reference's
+# transactional INSERT..ON CONFLICT guarantee,
+# postgres-adapter.ts:637-788). Partial version dirs from a crashed
+# run are overwritten by the next merge (same version number,
+# mode=overwrite) and never referenced. Single-writer per state_dir,
+# like the job loop it models.
 # ------------------------------------------------------------------ #
 
 _MANIFEST = "_CURRENT"
@@ -135,12 +148,15 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     Partitioned states are stitched from the per-partition version
     pointers; each partition path is read directly (5 shops — the
     stitch is a trivial union) with the partition column restored.
+    Every path is read through one reader carrying the manifest's
+    schema, so the read launches no Spark job.
 
     A dir holding data files but no manifest was not written by this
     store: ValueError, rather than reading files no manifest vouches
     for or reporting the store empty (the next commit would then
     orphan those rows). Bare ``v<N>`` dirs without a manifest are a
-    crashed first merge and read as empty."""
+    crashed first merge and read as empty. A manifest without a
+    schema was not written by this store either: ValueError."""
     m = _read_manifest(state_dir)
     if m is None:
         names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
@@ -154,13 +170,19 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
                 f"{_MANIFEST} manifest; it is not a versioned state store"
             )
         return None
+    if "schema" not in m:
+        raise ValueError(
+            f"state dir {state_dir!r} has a {_MANIFEST} manifest without "
+            "a schema; it was not written by this store"
+        )
     parts = m["partitions"]
+    reader = spark.read.schema(T.StructType.fromJson(m["schema"]))
     if set(parts) == {""}:
-        return spark.read.parquet(os.path.join(state_dir, parts[""]))
+        return reader.parquet(os.path.join(state_dir, parts[""]))
     out = None
     for shop, ver in sorted(parts.items()):
         p = os.path.join(state_dir, ver, f"shop_type={shop}")
-        df = spark.read.parquet(p).withColumn("shop_type", F.lit(shop))
+        df = reader.parquet(p).withColumn("shop_type", F.lit(shop))
         out = df if out is None else out.unionByName(df)
     return out
 
@@ -202,9 +224,12 @@ def merge_batch(
     are rewritten — the pruning a Delta MERGE would get from
     partition filters; untouched partitions keep their old version
     pointers, so the manifest swap is the ONLY globally visible step.
+    The same manifest write records the store's schema: the state's
+    columns plus any the batch adds, so the schema only grows.
     A null or empty shop_type has no partition path the manifest
-    could name: such a batch raises ValueError before anything is
-    written."""
+    could name, and a column whose type differs from the store's has
+    no type the untouched partitions' files hold: such a batch raises
+    ValueError before anything is written."""
     spark = batch.sparkSession
     os.makedirs(state_dir, exist_ok=True)
     manifest = _read_manifest(state_dir)
@@ -225,6 +250,14 @@ def merge_batch(
     batch = batch.withColumn("_src", F.lit(1))
     state = read_state(spark, state_dir)
     if state is not None:
+        # the state's schema comes from the manifest: no Spark job
+        held = {f.name: f.dataType.simpleString() for f in state.schema}
+        for f in batch.schema:
+            if f.name in held and f.dataType.simpleString() != held[f.name]:
+                raise ValueError(
+                    f"batch for {state_dir!r} has column {f.name!r} as "
+                    f"{f.dataType.simpleString()}; the store holds {held[f.name]}"
+                )
         state = state.withColumn("_src", F.lit(0))
         if partitioned:
             state = state.filter(F.col("shop_type").isin(shops))
@@ -250,7 +283,17 @@ def merge_batch(
     new_parts = (
         {**old_parts, **{s: vdir for s in shops}} if partitioned else {"": vdir}
     )
-    new_manifest = {"version": version, "partitions": new_parts}
+    # the data files' schema as a reader sees it: no partition column,
+    # every top-level field nullable
+    schema = T.StructType([
+        T.StructField(f.name, f.dataType, True, f.metadata)
+        for f in latest.schema if not (partitioned and f.name == "shop_type")
+    ])
+    new_manifest = {
+        "version": version,
+        "partitions": new_parts,
+        "schema": schema.jsonValue(),
+    }
     atomic_write(os.path.join(state_dir, _MANIFEST), json.dumps(new_manifest))
     _gc_versions(state_dir, new_manifest)
 

@@ -445,6 +445,111 @@ def test_gc_retains_superseded_version_one_cycle(spark, tmp_path):
     assert {d for d in os.listdir(state) if d.startswith("v")} == {"v2", "v3"}
 
 
+def test_read_state_launches_no_spark_job(spark, tmp_path):
+    """The manifest carries the store's schema, so reading a committed
+    state only lists files: no schema-inference job per partition
+    path, for a partitioned store and for an unpartitioned one."""
+    parted = str(tmp_path / "parted")
+    merge_batch(
+        spark.createDataFrame(
+            [("AH", "1", 2.0, 100), ("JUMBO", "7", 4.0, 100)],
+            "shop_type string, external_id string, current_price double, scraped_at long",
+        ),
+        parted, ["shop_type", "external_id"], "scraped_at",
+    )
+    flat = str(tmp_path / "flat")
+    merge_batch(
+        spark.createDataFrame([(1, "a", "2024-01-01")], "key long, v string, ord string"),
+        flat, ["key"], "ord",
+    )
+    tracker = spark.sparkContext.statusTracker()
+    for state, n in ((parted, 2), (flat, 1)):
+        before = set(tracker.getJobIdsForGroup())
+        df = read_state(spark, state)
+        assert set(tracker.getJobIdsForGroup()) == before, "read_state started a job"
+        assert df.count() == n
+
+
+def test_merge_grows_schema_across_shops(spark, tmp_path):
+    """A batch that adds a column widens the store's schema; partitions
+    written before it read the new column as null, and the store stays
+    readable and mergeable (an inferred per-partition read would fail
+    to union AH's 4 columns with JUMBO's 5)."""
+    state = str(tmp_path / "state")
+    keys = ["shop_type", "external_id"]
+    base = "shop_type string, external_id string, current_price double, scraped_at long"
+    merge_batch(spark.createDataFrame([("AH", "1", 2.0, 100)], base),
+                state, keys, "scraped_at")
+    merge_batch(
+        spark.createDataFrame([("JUMBO", "7", 4.0, 100, "Jumbo")], base + ", brand string"),
+        state, keys, "scraped_at",
+    )
+
+    def rows():
+        return {(r.shop_type, r.external_id): (r.current_price, r.brand)
+                for r in read_state(spark, state).collect()}
+
+    assert rows() == {("AH", "1"): (2.0, None), ("JUMBO", "7"): (4.0, "Jumbo")}
+    merge_batch(spark.createDataFrame([("AH", "2", 3.0, 200)], base),
+                state, keys, "scraped_at")
+    assert rows() == {
+        ("AH", "1"): (2.0, None),
+        ("AH", "2"): (3.0, None),
+        ("JUMBO", "7"): (4.0, "Jumbo"),
+    }
+
+
+def test_non_nullable_batch_reads_back_equal(spark, tmp_path):
+    """A batch whose fields are declared non-nullable reads back equal:
+    the manifest records the schema as Spark wrote the files, every
+    top-level field nullable."""
+    state = str(tmp_path / "state")
+    schema = T.StructType([
+        T.StructField("shop_type", T.StringType(), False),
+        T.StructField("external_id", T.StringType(), False),
+        T.StructField("current_price", T.DoubleType(), False),
+        T.StructField("scraped_at", T.LongType(), False),
+    ])
+    rows = [("AH", "1", 2.0, 100), ("JUMBO", "7", 4.0, 100)]
+    merge_batch(spark.createDataFrame(rows, schema), state,
+                ["shop_type", "external_id"], "scraped_at")
+    with open(os.path.join(state, "_CURRENT")) as f:
+        assert all(fld["nullable"] for fld in json.load(f)["schema"]["fields"])
+    got = {(r.shop_type, r.external_id, r.current_price, r.scraped_at)
+           for r in read_state(spark, state).collect()}
+    assert got == set(rows)
+
+
+def test_merge_rejects_a_retyped_column(spark, tmp_path):
+    """A column's type may not change: JUMBO's batch brings scraped_at
+    as a string after AH committed it as a long. AH's untouched files
+    hold a long, so the merge must refuse the batch before writing,
+    naming the dir and the column, and the store stays readable."""
+    state = str(tmp_path / "state")
+    keys = ["shop_type", "external_id"]
+    merge_batch(
+        spark.createDataFrame([("AH", "1", 2.0, 100)],
+                              "shop_type string, external_id string, "
+                              "current_price double, scraped_at long"),
+        state, keys, "scraped_at",
+    )
+    with open(os.path.join(state, "_CURRENT")) as f:
+        before = json.load(f)
+
+    batch = spark.createDataFrame(
+        [("JUMBO", "7", 4.0, "2024-01-01")],
+        "shop_type string, external_id string, current_price double, scraped_at string",
+    )
+    with pytest.raises(ValueError, match=rf"{re.escape(state)}.*'scraped_at'"):
+        merge_batch(batch, state, keys, "scraped_at")
+
+    with open(os.path.join(state, "_CURRENT")) as f:
+        assert json.load(f) == before
+    got = {(r.shop_type, r.external_id): r.scraped_at
+           for r in read_state(spark, state).collect()}
+    assert got == {("AH", "1"): 100}
+
+
 def test_ev4_anomaly_flags_exact_predicate(spark):
     """Engineered outlier: 9 days at n=10 plus one spike day n=100.
     μ=19, var=729 ⇒ |z|=81/27=3 exactly — NOT > 3 (strict), flagged
