@@ -463,18 +463,20 @@ _RETOUCHED_AFTER_GREEN: dict[str, int] = {
     "td23_minhash_est_pairs": 13,
     # round-14 touched (category cascade as a lazy pandas-UDF kernel)
     "a12_mapping_methods": 14,
-    "p1_ah_pipeline": 14,
-    "p2_jumbo_pipeline": 14,
-    "p3_aldi_pipeline": 14,
-    "p4_plus_pipeline": 14,
-    "p6_generic_kruidvat": 14,
-    "f5_incomplete_filter": 14,
-    "q2_quality_report": 14,
-    "x3_validation_summary": 14,
     # round-16 touched (the state manifest carries the schema;
     # read_state reads through it with no inference job)
     "st12_merge_state": 16,
     "st13_merge_skip_unchanged": 16,
+    # round-17 touched (every shop pipeline ends in the shared finish;
+    # Plus normalizes in one projection instead of a split + union)
+    "p1_ah_pipeline": 17,
+    "p2_jumbo_pipeline": 17,
+    "p3_aldi_pipeline": 17,
+    "p4_plus_pipeline": 17,
+    "p6_generic_kruidvat": 17,
+    "f5_incomplete_filter": 17,
+    "q2_quality_report": 17,
+    "x3_validation_summary": 17,
 }
 
 

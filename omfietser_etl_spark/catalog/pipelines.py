@@ -84,7 +84,7 @@ def _jumbo_raw(spark: SparkSession, sf: str) -> DataFrame:
 
 def p2_jumbo_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     raw = _jumbo_raw(spark, sf)
-    unified, _ = jumbo.pipeline(raw, with_errors=False)
+    unified, _ = jumbo.pipeline(raw)
     return unified.withColumn(
         "p_partkey", F.regexp_replace("unified_id", "^J", "").cast("long")
     ).select("p_partkey", *OUT_COLS)
@@ -179,7 +179,7 @@ def _ah_raw(spark: SparkSession, sf: str) -> DataFrame:
 
 def p1_ah_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     raw = _ah_raw(spark, sf)
-    unified, _ = ah.pipeline(raw.drop("p_partkey"), with_errors=False)
+    unified, _ = ah.pipeline(raw.drop("p_partkey"))
     return unified.withColumn("p_partkey", F.col("unified_id").cast("long")).select(
         "p_partkey", *OUT_COLS
     )
@@ -260,7 +260,7 @@ ALDI_OUT = OUT_COLS + ["promotion_start_date", "promotion_end_date"]
 
 def p3_aldi_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     raw = _aldi_raw(spark, sf)
-    unified, _ = aldi.pipeline(raw.drop("p_partkey"), with_errors=False)
+    unified, _ = aldi.pipeline(raw.drop("p_partkey"))
     return unified.withColumn(
         "p_partkey", F.regexp_replace("unified_id", "^A", "").cast("long")
     ).select("p_partkey", *ALDI_OUT)
@@ -346,7 +346,7 @@ PLUS_OUT = OUT_COLS + ["promotion_start_date", "promotion_end_date"]
 
 def p4_plus_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     raw = _plus_raw(spark, sf)
-    unified, _ = plus.pipeline(raw.drop("p_partkey"), with_errors=False)
+    unified, _ = plus.pipeline(raw.drop("p_partkey"))
     return unified.withColumn(
         "p_partkey", F.regexp_replace("unified_id", "^P", "").cast("long")
     ).select("p_partkey", *PLUS_OUT)
@@ -468,8 +468,7 @@ def _kruidvat_raw(spark: SparkSession, sf: str) -> DataFrame:
 
 def p6_generic_kruidvat(spark: SparkSession, sf: str) -> DataFrame:
     raw = _kruidvat_raw(spark, sf)
-    unified, _ = generic.pipeline(raw.drop("p_partkey"), shop="kruidvat",
-                                  with_errors=False)
+    unified, _ = generic.pipeline(raw.drop("p_partkey"), shop="kruidvat")
     return unified.withColumn(
         "p_partkey", F.regexp_replace("unified_id", "^kruidvat_K", "").cast("long")
     ).select("p_partkey", *OUT_COLS)

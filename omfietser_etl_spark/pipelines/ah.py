@@ -14,14 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quantities import normalize_unit
 from ..operators.category import normalize_categories
-from .common import (
-    apply_calculate_fields,
-    apply_template_defaults,
-    qty_struct,
-    select_unified,
-    split_errors,
-    stage_break,
-)
+from .common import finish, qty_struct, split_transform_errors
 
 
 def skip_filter(raw: DataFrame) -> DataFrame:
@@ -254,34 +247,11 @@ def _transform_exprs() -> dict:
 
 
 def pipeline(
-    raw: DataFrame, predictions: DataFrame | None = None, with_errors: bool = True
-) -> tuple[DataFrame, DataFrame | None]:
+    raw: DataFrame, predictions: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
     """Full AH dataflow: skip → transform (+error channel) → category
-    cascade → template defaults → calculateFields → business-rule
-    split. Returns (unified, errors).
-
-    ``with_errors=False`` skips the dead-letter branch (and its
-    persist-backed fan-out) for callers that only consume unified rows.
-    """
-    kept = skip_filter(raw)
-    t = transform(kept)
-    transform_errors = None
-    if with_errors:
-        transform_errors = t.filter(F.col("_transform_err").isNotNull()).select(
-            F.col("unified_id").alias("raw_product_id"),
-            "shop_type",
-            F.col("_transform_err").alias("error_type"),
-            F.lit("high").alias("severity"),
-            F.concat(F.lit("transform error: "), F.col("_transform_err")).alias(
-                "error_message"
-            ),
-        )
-    ok = t.filter(F.col("_transform_err").isNull()).drop("_transform_err")
+    cascade → the shared finish (template defaults → calculateFields →
+    business-rule split). Returns (unified, errors)."""
+    ok, transform_errors = split_transform_errors(transform(skip_filter(raw)))
     ok = normalize_categories(ok, predictions=predictions)
-    ok = apply_template_defaults(ok)
-    ok = stage_break(ok)
-    ok = apply_calculate_fields(ok)
-    valid, rule_errors = split_errors(ok)
-    if not with_errors:
-        return select_unified(valid), None
-    return select_unified(valid), transform_errors.unionByName(rule_errors)
+    return finish(ok, transform_errors)

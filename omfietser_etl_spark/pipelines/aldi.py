@@ -17,13 +17,7 @@ from ..functions.promotions import parse_promotion_mechanism
 from ..functions.quantities import normalize_unit
 from ..functions.text import js_parse_float
 from ..operators.category import normalize_categories
-from .common import (
-    apply_calculate_fields,
-    apply_template_defaults,
-    select_unified,
-    split_errors,
-    stage_break,
-)
+from .common import finish, split_transform_errors
 
 DEFAULT_RUN_DATE = "2025-09-12"  # reference snapshot date; override per run
 
@@ -237,6 +231,8 @@ def _transform_exprs(run_date: str) -> dict:
             ~F.col("isNotAvailable").eqNullSafe(F.lit(True))
             & ~F.col("isSoldOut").eqNullSafe(F.lit(True))
         ).alias("is_active"),
+        # the reference transform never throws: no transform errors
+        F.lit(None).cast("string").alias("_transform_err"),
     ]
     return {"stage1": stage1, "cur": cur_expr, "final": final}
 
@@ -245,13 +241,9 @@ def pipeline(
     raw: DataFrame,
     predictions: DataFrame | None = None,
     run_date: str = DEFAULT_RUN_DATE,
-    with_errors: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    kept = skip_filter(raw)
-    t = transform(kept, run_date=run_date)
-    t = normalize_categories(t, predictions=predictions)
-    t = apply_template_defaults(t)
-    t = stage_break(t)
-    t = apply_calculate_fields(t)
-    valid, errors = split_errors(t)
-    return select_unified(valid), (errors if with_errors else None)
+) -> tuple[DataFrame, DataFrame]:
+    ok, transform_errors = split_transform_errors(
+        transform(skip_filter(raw), run_date=run_date)
+    )
+    ok = normalize_categories(ok, predictions=predictions)
+    return finish(ok, transform_errors)

@@ -1,5 +1,13 @@
 """Shared pipeline stages: template defaults, calculate-fields
-enrichment, business-rule validation split.
+enrichment, business-rule validation split, and the one finish every
+shop pipeline ends with.
+
+Every shop pipeline has the same shape, mirroring the reference's
+single processing template (processors/base.ts:82-196): the shop's
+skip filter and transform, ``split_transform_errors``, the shop's
+``normalize_categories`` call, then ``finish`` (template defaults →
+stage break → calculateFields → business-rule split → unified
+projection). A pipeline returns ``(unified, errors)``.
 
 Ref: createProductTemplate defaults (unified-product-template.ts:161-219
 — JS `||` semantics: 0/''/false/null all take the default),
@@ -184,35 +192,29 @@ def business_rule_errors(df: DataFrame) -> Column:
     )
 
 
-def split_errors(df: DataFrame, persist: bool = True) -> tuple[DataFrame, DataFrame]:
+def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split unified rows into (valid, dead-letter) — the error rows
     mirror processing_errors (K4).
 
-    With ``persist`` (the default, for callers that consume BOTH
-    branches) the enriched batch is materialized once: the split is a
-    fan-out, and the persist stops PushPredicateThroughProject from
-    substituting the _err filter with the entire upstream expression
-    cascade (which makes codegen explode on small-heap drivers).
-    MEMORY_AND_DISK so oversized batches spill instead of failing.
-
-    Callers that only consume the valid branch (analytics queries that
-    discard the dead-letter) pass ``persist=False``: a single plan
-    instance with a cheap pushed predicate (the business rules touch
-    only the price/promo-flag columns), no materialization cost.
+    The enriched batch is persisted once, MEMORY_AND_DISK so oversized
+    batches spill instead of failing. The split is a fan-out, and the
+    persist stops PushPredicateThroughProject from substituting the
+    _err filter with the entire upstream expression cascade (which
+    makes codegen explode on small-heap drivers) — load-bearing even
+    when only the valid branch is consumed. The persist registers under
+    the "pipelines.split_errors" scope, so the next split releases it.
     """
     from pyspark import StorageLevel
 
     from ..cacheutil import release_then_register
 
     flagged = df.withColumn("_err", business_rule_errors(df))
-    if persist:
-        # registered so the NEXT split releases it — back-to-back
-        # pipeline invocations (the catalog runs six) otherwise stack
-        # persisted 32-column batches in executor memory
-        flagged = release_then_register(
-            "pipelines.split_errors",
-            flagged.persist(StorageLevel.MEMORY_AND_DISK),
-        )
+    # back-to-back pipeline invocations (the catalog runs six)
+    # otherwise stack persisted 32-column batches in executor memory
+    flagged = release_then_register(
+        "pipelines.split_errors",
+        flagged.persist(StorageLevel.MEMORY_AND_DISK),
+    )
     valid = flagged.filter(F.col("_err").isNull()).drop("_err")
     errors = flagged.filter(F.col("_err").isNotNull()).select(
         F.col("unified_id").alias("raw_product_id"),
@@ -224,6 +226,36 @@ def split_errors(df: DataFrame, persist: bool = True) -> tuple[DataFrame, DataFr
         ),
     )
     return valid, errors
+
+
+def split_transform_errors(t: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split a shop transform's output on its ``_transform_err`` column
+    into (ok rows, transform-error dead-letter rows) — the reference's
+    transform-time throws (e.g. ah.ts:200-267, plus.ts:269-289).
+
+    Shops whose transform never throws emit a constant null
+    ``_transform_err``; the optimizer folds their error branch to an
+    empty relation and prunes it."""
+    err = F.col("_transform_err")
+    errors = t.filter(err.isNotNull()).select(
+        F.col("unified_id").alias("raw_product_id"),
+        "shop_type",
+        err.alias("error_type"),
+        F.lit("high").alias("severity"),
+        F.concat(F.lit("transform error: "), err).alias("error_message"),
+    )
+    return t.filter(err.isNull()).drop("_transform_err"), errors
+
+
+def finish(ok: DataFrame, transform_errors: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The shared tail of every shop pipeline: template defaults →
+    stage break → calculateFields → business-rule split → unified
+    projection. Returns (unified, transform errors ∪ rule errors)."""
+    ok = apply_template_defaults(ok)
+    ok = stage_break(ok)
+    ok = apply_calculate_fields(ok)
+    valid, rule_errors = split_errors(ok)
+    return select_unified(valid), transform_errors.unionByName(rule_errors)
 
 
 def select_unified(df: DataFrame) -> DataFrame:

@@ -23,14 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .common import (
-    apply_calculate_fields,
-    apply_template_defaults,
-    qty_struct,
-    select_unified,
-    split_errors,
-    stage_break,
-)
+from .common import finish, qty_struct, split_transform_errors
 from ..operators.category import normalize_categories
 
 # candidate JSON paths per unified field, first non-empty wins
@@ -151,26 +144,7 @@ def pipeline(
     raw: DataFrame,
     shop: str = "kruidvat",
     predictions: DataFrame | None = None,
-    with_errors: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    t = transform(raw, shop)
-    transform_errors = None
-    if with_errors:
-        transform_errors = t.filter(F.col("_transform_err").isNotNull()).select(
-            F.col("unified_id").alias("raw_product_id"),
-            "shop_type",
-            F.col("_transform_err").alias("error_type"),
-            F.lit("high").alias("severity"),
-            F.concat(F.lit("transform error: "), F.col("_transform_err")).alias(
-                "error_message"
-            ),
-        )
-    ok = t.filter(F.col("_transform_err").isNull()).drop("_transform_err")
+) -> tuple[DataFrame, DataFrame]:
+    ok, transform_errors = split_transform_errors(transform(raw, shop))
     ok = normalize_categories(ok, predictions=predictions)
-    ok = apply_template_defaults(ok)
-    ok = stage_break(ok)
-    ok = apply_calculate_fields(ok)
-    valid, rule_errors = split_errors(ok)
-    if not with_errors:
-        return select_unified(valid), None
-    return select_unified(valid), transform_errors.unionByName(rule_errors)
+    return finish(ok, transform_errors)

@@ -14,14 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.promotions import parse_promotion_mechanism
 from ..functions.quantities import normalize_unit
 from ..operators.category import normalize_categories
-from .common import (
-    apply_calculate_fields,
-    apply_template_defaults,
-    qty_struct,
-    select_unified,
-    split_errors,
-    stage_break,
-)
+from .common import finish, qty_struct, split_transform_errors
 
 
 def skip_filter(raw: DataFrame) -> DataFrame:
@@ -163,18 +156,15 @@ def _transform_exprs() -> list:
             ~p["availability"]["isAvailable"].eqNullSafe(F.lit(False))
             & ~p["inAssortment"].eqNullSafe(F.lit(False))
         ).alias("is_active"),
+        # the reference transform never throws: no transform errors
+        F.lit(None).cast("string").alias("_transform_err"),
     ]
     return {"stage1": stage1, "cur": cur_expr, "final": final}
 
 
 def pipeline(
-    raw: DataFrame, predictions: DataFrame | None = None, with_errors: bool = True
-) -> tuple[DataFrame, DataFrame | None]:
-    kept = skip_filter(raw)
-    t = transform(kept)
-    t = normalize_categories(t, predictions=predictions)
-    t = apply_template_defaults(t)
-    t = stage_break(t)
-    t = apply_calculate_fields(t)
-    valid, errors = split_errors(t)
-    return select_unified(valid), (errors if with_errors else None)
+    raw: DataFrame, predictions: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    ok, transform_errors = split_transform_errors(transform(skip_filter(raw)))
+    ok = normalize_categories(ok, predictions=predictions)
+    return finish(ok, transform_errors)

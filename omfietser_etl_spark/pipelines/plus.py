@@ -15,13 +15,7 @@ from ..functions.promotions import parse_promotion_mechanism
 from ..functions.quantities import normalize_unit
 from ..functions.text import js_parse_float
 from ..operators.category import normalize_categories
-from .common import (
-    apply_calculate_fields,
-    apply_template_defaults,
-    select_unified,
-    split_errors,
-    stage_break,
-)
+from .common import finish, split_transform_errors
 
 _SENTINEL = "1900-01-01"
 
@@ -198,32 +192,13 @@ def _transform_exprs() -> dict:
 
 
 def pipeline(
-    raw: DataFrame, predictions: DataFrame | None = None, with_errors: bool = True
-) -> tuple[DataFrame, DataFrame | None]:
-    kept = skip_filter(raw)
-    t = transform(kept)
-    transform_errors = None
-    if with_errors:
-        transform_errors = t.filter(F.col("_transform_err").isNotNull()).select(
-            F.col("unified_id").alias("raw_product_id"),
-            "shop_type",
-            F.col("_transform_err").alias("error_type"),
-            F.lit("high").alias("severity"),
-            F.concat(F.lit("transform error: "), F.col("_transform_err")).alias(
-                "error_message"
-            ),
-        )
-    ok = t.filter(F.col("_transform_err").isNull()).drop("_transform_err")
+    raw: DataFrame, predictions: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    ok, transform_errors = split_transform_errors(transform(skip_filter(raw)))
     # Plus only normalizes when an initial category exists
     # (plus.ts:95-104); null categories stay null
-    has_cat = ok.filter(F.col("main_category").isNotNull())
-    no_cat = ok.filter(F.col("main_category").isNull())
-    has_cat = normalize_categories(has_cat, predictions=predictions)
-    ok = has_cat.unionByName(no_cat)
-    ok = apply_template_defaults(ok)
-    ok = stage_break(ok)
-    ok = apply_calculate_fields(ok)
-    valid, errors = split_errors(ok)
-    if not with_errors:
-        return select_unified(valid), None
-    return select_unified(valid), transform_errors.unionByName(errors)
+    ok = normalize_categories(ok, predictions=predictions, output_col="_cat")
+    ok = ok.withColumn(
+        "main_category", F.when(F.col("main_category").isNotNull(), F.col("_cat"))
+    ).drop("_cat")
+    return finish(ok, transform_errors)

@@ -113,11 +113,12 @@ def run_file_mode(
                 n_corrupt=n_corrupt,
             )
         )
-    # free the last shop's cached JSON parse (the per-shop scope only
-    # releases on the NEXT call)
+    # free the last shop's cached JSON parse and split batch (the
+    # per-shop scopes only release on the NEXT call)
     from .cacheutil import release
 
     release("sources.read_shop_json")
+    release("pipelines.split_errors")
     if results:
         # the known schema spares an inference job; the reports group
         # by shop (visualization: visualize-data.ts:11-95)

@@ -315,3 +315,35 @@ def test_plus_pipeline(spark):
 
     errs = errors.collect()
     assert len(errs) == 1 and errs[0]["error_type"] == "missing_required_fields"
+
+
+def test_plus_plan_carries_its_transform_once(spark):
+    """Plus normalizes only rows that have a category in one
+    projection, not by splitting the batch into has-category and
+    no-category frames and unioning them back: the batch its unified
+    frame caches holds no Union, so the transform is planned once."""
+    raw = spark.createDataFrame([_plus_row()], PLUS_SCHEMA)
+    unified, _ = plus.pipeline(raw)
+    plan = unified._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan
+    assert "Union" not in plan
+
+
+def test_plus_null_category_stays_null(spark):
+    """A Plus row without an initial category keeps a null
+    main_category (plus.ts:95-104), even when a confident prediction
+    matches its title; a row with a category is still normalized."""
+    rows = [
+        _plus_row(SKU="cat", Name="PLUS Kaas", Categories={"List": [{"Name": "zuivel"}]}),
+        _plus_row(SKU="nocat", Name="PLUS Melk", Categories={"List": []}),
+    ]
+    raw = spark.createDataFrame(rows, PLUS_SCHEMA)
+    predictions = spark.createDataFrame(
+        [("PLUS Melk", "Zuivel, eieren, boter", 0.9)],
+        "title string, category string, confidence double",
+    )
+    for preds in (None, predictions):
+        unified, errors = plus.pipeline(raw, predictions=preds)
+        got = {r["unified_id"]: r["main_category"] for r in unified.collect()}
+        assert got == {"cat": "Zuivel, eieren, boter", "nocat": None}
+        assert errors.count() == 0

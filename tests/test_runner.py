@@ -121,6 +121,23 @@ def test_run_file_mode_reads_its_output_once_with_a_schema(spark, tmp_path, monk
     assert sorted(os.path.basename(p) for p in paths) == ["ah", "jumbo"]
 
 
+def test_run_file_mode_leaves_no_cached_batch(spark, tmp_path):
+    """The run frees every batch it caches: the persistent-RDD census
+    is the same before and after, so the last shop's JSON parse and
+    split batch do not outlive it."""
+    from omfietser_etl_spark import cacheutil
+
+    # an earlier pipeline call in this session may still hold its batch
+    cacheutil.release("sources.read_shop_json")
+    cacheutil.release("pipelines.split_errors")
+    sc = spark.sparkContext
+    before = cacheutil.persistent_rdd_ids(sc)
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    _write_inputs(inp)
+    run_file_mode(spark, inp, out)
+    assert cacheutil.persistent_rdd_ids(sc) == before
+
+
 def test_run_file_mode_zero_row_shop(spark, tmp_path):
     """A shop whose every record is skipped still gets its reports:
     an empty quality list and null completeness figures, and no entry
