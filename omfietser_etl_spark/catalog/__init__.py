@@ -468,15 +468,18 @@ _RETOUCHED_AFTER_GREEN: dict[str, int] = {
     "st12_merge_state": 16,
     "st13_merge_skip_unchanged": 16,
     # round-17 touched (every shop pipeline ends in the shared finish;
-    # Plus normalizes in one projection instead of a split + union)
-    "p1_ah_pipeline": 17,
-    "p2_jumbo_pipeline": 17,
-    "p3_aldi_pipeline": 17,
-    "p4_plus_pipeline": 17,
-    "p6_generic_kruidvat": 17,
-    "f5_incomplete_filter": 17,
-    "q2_quality_report": 17,
-    "x3_validation_summary": 17,
+    # Plus normalizes in one projection instead of a split + union),
+    # then round-18 (every memoized Column builder is a functools.cache
+    # function; d1 since round 18 only)
+    "d1_promo_parse": 18,
+    "p1_ah_pipeline": 18,
+    "p2_jumbo_pipeline": 18,
+    "p3_aldi_pipeline": 18,
+    "p4_plus_pipeline": 18,
+    "p6_generic_kruidvat": 18,
+    "f5_incomplete_filter": 18,
+    "q2_quality_report": 18,
+    "x3_validation_summary": 18,
 }
 
 

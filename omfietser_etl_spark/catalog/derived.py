@@ -12,6 +12,8 @@ or a non-tie.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,6 +55,13 @@ MECHS = [
 ]
 
 
+@cache
+def _d1_parser():
+    """The promotion parser over d1's fixed column names — built once
+    per process."""
+    return parse_promotion_mechanism(F.col("mech"), F.col("orig"), F.col("cur"))
+
+
 def d1_promo_parse(spark: SparkSession, sf: str) -> DataFrame:
     li = load(spark, sf, "lineitem", fanout=True)
     mech_arr = F.array(*[F.lit(m) for m in MECHS])
@@ -63,16 +72,10 @@ def d1_promo_parse(spark: SparkSession, sf: str) -> DataFrame:
         ((F.col("l_partkey") % 90) + 10).cast("double").alias("orig"),
         (((F.col("l_partkey") % 90) + 10).cast("double") - 0.5).alias("cur"),
     ).withColumn("mech", F.element_at(mech_arr, F.col("v").cast("int") + 1))
-    from omfietser_etl_spark.exprcache import column_memo
-
-    parsed = column_memo(
-        ("d1_parse",),
-        lambda: parse_promotion_mechanism(F.col("mech"), F.col("orig"), F.col("cur")),
-    )
     # Stage the parser struct as a real column: referenced 5× below, it
     # must be evaluated once per row, not inlined 5× (CollapseProject
     # keeps non-cheap multi-use projections separate).
-    return base.withColumn("p", parsed).select(
+    return base.withColumn("p", _d1_parser()).select(
         "l_orderkey",
         "l_linenumber",
         F.col("p.promo_type").alias("promo_type"),

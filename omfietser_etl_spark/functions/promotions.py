@@ -13,6 +13,8 @@ All arithmetic is ANSI-safe: try_cast for lenient number parsing
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -166,51 +168,23 @@ def structured_discount(cur: Column) -> Column:
     return _result("STRUCTURED_DISCOUNT", cur, current_price=cur, round_eff=False)
 
 
-def standard_parsed_promo(shop_col: str = "shop_type") -> Column:
+@cache
+def standard_parsed_promo() -> Column:
     """The full promotion-parse expression over the FIXED unified
-    column names — memoized per process: the tree is ~2500 JVM calls
+    column names — built once per process: the tree is ~2500 JVM calls
     to build (≈0.9 s of Py4J latency) and identical on every
     invocation, so the pipelines reuse one unresolved instance."""
-    from ..exprcache import column_memo
-
-    def build() -> Column:
-        mech = F.col("promotion_mechanism")
-        # JS truthiness: any non-empty mechanism (including the
-        # 'none' template default) enters the parser
-        # (ref: calculate-fields.ts:27)
-        applicable = F.col("is_promotion") & mech.isNotNull() & (mech != "")
-        return F.when(
-            applicable,
-            F.when(
-                F.col(shop_col) == "AH", structured_discount(F.col("current_price"))
-            ).otherwise(
-                parse_promotion_mechanism(
-                    mech, F.col("price_before_bonus"), F.col("current_price")
-                )
-            ),
-        )
-
-    return column_memo(("parsed_promo", shop_col), build)
-
-
-def with_parsed_promotion(df, shop_col: str = "shop_type"):
-    """Attach the four parsed_promotion_* unified columns.
-
-    Only promoted rows with a non-empty mechanism are parsed
-    (ref: calculate-fields.ts:27-66); AH takes the structured path.
-    """
-    df = df.withColumn("_parsed_promo", standard_parsed_promo(shop_col))
-    return (
-        df.withColumn(
-            "parsed_promotion_effective_unit_price",
-            F.col("_parsed_promo.effective_unit_price"),
-        )
-        .withColumn("parsed_promotion_required_quantity", F.col("_parsed_promo.required_quantity"))
-        .withColumn("parsed_promotion_total_price", F.col("_parsed_promo.total_price"))
-        .withColumn(
-            "parsed_promotion_is_multi_purchase_required",
-            F.col("_parsed_promo.is_multi_purchase_required"),
-        )
-        .withColumn("parsed_promotion_type", F.col("_parsed_promo.promo_type"))
-        .drop("_parsed_promo")
+    mech = F.col("promotion_mechanism")
+    # JS truthiness: any non-empty mechanism (including the 'none'
+    # template default) enters the parser (ref: calculate-fields.ts:27)
+    applicable = F.col("is_promotion") & mech.isNotNull() & (mech != "")
+    return F.when(
+        applicable,
+        F.when(
+            F.col("shop_type") == "AH", structured_discount(F.col("current_price"))
+        ).otherwise(
+            parse_promotion_mechanism(
+                mech, F.col("price_before_bonus"), F.col("current_price")
+            )
+        ),
     )

@@ -14,6 +14,7 @@ The ordered partial-containment pass uses a literal array of
 
 from __future__ import annotations
 
+from functools import cache
 from itertools import chain
 
 from pyspark.sql import Column
@@ -28,18 +29,16 @@ from ..config.units import (
     UNIT_TO_CATEGORY,
 )
 
+
 # Literal maps/arrays must be built lazily — Column construction
 # needs an active SparkSession (import-time fails under pytest).
-from functools import lru_cache
-
-
-@lru_cache(maxsize=None)
+@cache
 def _alias_map() -> Column:
     """literal map unit-alias → code"""
     return F.create_map(*[F.lit(x) for x in chain.from_iterable(UNIT_ALIASES)])
 
 
-@lru_cache(maxsize=None)
+@cache
 def _alias_array() -> Column:
     """ordered array of alias structs for the containment fallback"""
     return F.array(
@@ -47,7 +46,7 @@ def _alias_array() -> Column:
     )
 
 
-@lru_cache(maxsize=None)
+@cache
 def _category_map() -> Column:
     """normalized unit code → measurement category"""
     return F.create_map(*[F.lit(x) for kv in UNIT_TO_CATEGORY.items() for x in kv])
@@ -56,18 +55,18 @@ def _category_map() -> Column:
 _TO_BASE = {u: f for factors in CONVERSION_FACTORS.values() for u, f in factors.items()}
 
 
-@lru_cache(maxsize=None)
+@cache
 def _to_base_map() -> Column:
     """normalized unit code → factor to the category base (g/ml/mm/mm²)"""
     return F.create_map(*[F.lit(x) for kv in _TO_BASE.items() for x in kv])
 
 
-@lru_cache(maxsize=None)
+@cache
 def _divisor_map() -> Column:
     return F.create_map(*[F.lit(x) for kv in BASE_TO_STANDARD_DIVISOR.items() for x in kv])
 
 
-@lru_cache(maxsize=None)
+@cache
 def _ref_unit_map() -> Column:
     return F.create_map(*[F.lit(x) for kv in REFERENCE_UNITS.items() for x in kv])
 
@@ -194,6 +193,34 @@ def with_standardized_quantity(
     return out.drop(key, res, f"__{out_col}_amt")
 
 
+def _staged_names(out_col: str) -> tuple[str, str, str, str]:
+    """The staged cleaned-unit, code, unit and amount column names."""
+    return tuple(f"__{out_col}_{s}" for s in ("cl", "nu", "u", "a"))
+
+
+@cache
+def _staged_exprs(out_col: str) -> dict:
+    """The clean/normalize/standardize trees over ``out_col``'s staged
+    column names — thousands of Py4J calls, built once per process and
+    ``out_col``."""
+    cl, nu, u, a = _staged_names(out_col)
+    code = F.when(
+        F.col(u).isNull() | (F.col(u) == ""), F.lit("stuk")
+    ).otherwise(_normalize_cleaned(F.col(cl)))
+    cat = F.coalesce(F.element_at(_category_map(), F.col(nu)), F.lit("piece"))
+    res = F.struct(
+        cat.alias("category"),
+        F.coalesce(F.element_at(_to_base_map(), F.col(nu)), F.lit(1.0)).alias("to_base"),
+        F.element_at(_divisor_map(), cat).alias("divisor"),
+        F.element_at(_ref_unit_map(), cat).alias("std_unit"),
+    )
+    return {
+        "cl": clean_unit(F.col(u)),
+        "code": code,
+        "out": standardize_resolved(F.col(a), F.col(u), res),
+    }
+
+
 def with_standardized_quantity_staged(
     df, amount: Column, unit: Column, out_col: str
 ):
@@ -210,32 +237,8 @@ def with_standardized_quantity_staged(
     form: a containment-fold miss evaluates `contains` against a
     staged string column instead of re-evaluating the clean_unit regex
     chain per alias element (~30× on miss-heavy data)."""
-    from ..exprcache import column_memo
-
-    cl, nu, u, a = (f"__{out_col}_{s}" for s in ("cl", "nu", "u", "a"))
-
-    # the clean/normalize/standardize trees are thousands of Py4J
-    # calls over fixed staged-column names — build once per process
-    def build() -> dict:
-        code = F.when(
-            F.col(u).isNull() | (F.col(u) == ""), F.lit("stuk")
-        ).otherwise(_normalize_cleaned(F.col(cl)))
-        cat = F.coalesce(F.element_at(_category_map(), F.col(nu)), F.lit("piece"))
-        res = F.struct(
-            cat.alias("category"),
-            F.coalesce(F.element_at(_to_base_map(), F.col(nu)), F.lit(1.0)).alias(
-                "to_base"
-            ),
-            F.element_at(_divisor_map(), cat).alias("divisor"),
-            F.element_at(_ref_unit_map(), cat).alias("std_unit"),
-        )
-        return {
-            "cl": clean_unit(F.col(u)),
-            "code": code,
-            "out": standardize_resolved(F.col(a), F.col(u), res),
-        }
-
-    exprs = column_memo(("d2_staged", out_col), build)
+    cl, nu, u, a = _staged_names(out_col)
+    exprs = _staged_exprs(out_col)
     staged = df.withColumns({u: unit, a: amount})
     staged = staged.withColumn(cl, exprs["cl"])
     staged = staged.withColumn(nu, exprs["code"])

@@ -2,8 +2,9 @@
 expressions — all built-ins, whole-stage-codegen friendly.
 
 Ref: projects/processor/src/utils/string.ts (normalize, levenshtein
-similarity, number extraction, price parse/format, truncate) and the
-category-specific normalizer (core/services/category/normalizer.ts:94-103).
+similarity, number extraction, price parse/format, truncate). The
+category-specific normalizer (core/services/category/normalizer.ts:94-103)
+lives in the category cascade, ``operators/category._norm``.
 """
 
 from __future__ import annotations
@@ -11,24 +12,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config.categories import CATEGORY_STOPWORDS
-
 
 def normalize_string(s: Column) -> Column:
     """lower, non-alphanumeric → space, collapse whitespace, trim
     (ref: string.ts:51-59)."""
     out = F.lower(s)
     out = F.regexp_replace(out, r"[^a-z0-9]+", " ")
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
-
-
-def normalize_category_string(s: Column) -> Column:
-    """Category variant: punctuation → space, Dutch stop words
-    removed, whitespace collapsed (ref: normalizer.ts:94-103)."""
-    out = F.lower(F.trim(s))
-    out = F.regexp_replace(out, r"[,\-_/\\()&]", " ")
-    stop_rx = r"\b(" + "|".join(CATEGORY_STOPWORDS) + r")\b"
-    out = F.regexp_replace(out, stop_rx, "")
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 

@@ -9,6 +9,8 @@ quantity parse :625-649).
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -111,18 +113,17 @@ def _structured_discount_agg(labels: Column, orig: Column, raw_cur: Column) -> C
 
 def transform(raw: DataFrame) -> DataFrame:
     """P1 projection to pre-template unified columns."""
-    from ..exprcache import column_memo
-
-    exprs = column_memo(("ah_transform",), _transform_exprs)
+    exprs = _transform_exprs()
     df = raw.withColumn("_sd", exprs["sd"])
     df = df.withColumn("_transform_err", exprs["err"])
     df = df.withColumns(exprs["stage"])
     return df.select(*exprs["final"])
 
 
+@cache
 def _transform_exprs() -> dict:
     """All transform expressions over the fixed AH schema — built
-    once per process (exprcache)."""
+    once per process."""
     labels = F.col("discountLabels")
     orig = F.coalesce(F.col("priceBeforeBonus"), F.lit(0.0))
     raw_cur = F.col("currentPrice")

@@ -10,6 +10,8 @@ week dates :390-409 (wall-clock in the reference — made an explicit
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -51,17 +53,16 @@ def _parse_price(raw_price: Column, formatted: Column) -> Column:
 
 
 def transform(raw: DataFrame, run_date: str = DEFAULT_RUN_DATE) -> DataFrame:
-    from ..exprcache import column_memo
-
-    exprs = column_memo(("aldi_transform", run_date), lambda: _transform_exprs(run_date))
+    exprs = _transform_exprs(run_date)
     staged = raw.withColumns(exprs["stage1"])
     staged = staged.withColumn("_cur", exprs["cur"])
     return staged.select(*exprs["final"])
 
 
+@cache
 def _transform_exprs(run_date: str) -> dict:
     """All transform expressions over the fixed ALDI schema — built
-    once per (process, run_date) via exprcache."""
+    once per (process, run_date)."""
     price = _parse_price(F.col("price"), F.col("priceFormatted"))
     old_raw = F.col("oldPrice")
     orig = F.when(old_raw.isNotNull(), js_parse_float(old_raw)).otherwise(price)

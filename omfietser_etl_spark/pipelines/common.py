@@ -22,11 +22,13 @@ re-analyze an increasingly large plan quadratically).
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.prices import discount_metrics, price_per_unit
-from ..functions.promotions import parse_promotion_mechanism, structured_discount
+from ..functions.promotions import standard_parsed_promo
 from ..functions.quantities import normalize_unit, with_standardized_quantity_staged
 from ..schemas import UNIFIED_COLUMN_NAMES
 
@@ -59,38 +61,79 @@ def qty_struct(text: Column) -> Column:
     )
 
 
+@cache
+def _template_defaults() -> dict:
+    """The template-defaults expressions over fixed column names —
+    built once per process."""
+    s = {c: js_or(F.col(c).cast("string"), d) for c, d in {
+        "unified_id": "",
+        "shop_type": "",
+        "title": "",
+        "brand": "",
+        "image_url": "",
+        "sales_unit_size": "",
+        "quantity_unit": "",
+        "promotion_type": "none",
+        "promotion_mechanism": "none",
+    }.items()}
+    # main_category: `|| null` — empty string becomes null
+    s["main_category"] = F.nullif(F.col("main_category"), F.lit(""))
+    s["quantity_amount"] = js_or_num(F.col("quantity_amount").cast("double"), 0.0)
+    s["price_before_bonus"] = js_or_num(F.col("price_before_bonus").cast("double"), 0.0)
+    s["current_price"] = js_or_num(F.col("current_price").cast("double"), 0.0)
+    s["is_promotion"] = F.coalesce(F.col("is_promotion").cast("boolean"), F.lit(False))
+    s["is_active"] = F.coalesce(F.col("is_active").cast("boolean"), F.lit(True))
+    return s
+
+
 def apply_template_defaults(df: DataFrame) -> DataFrame:
     """Fill the template defaults over whatever the transform set
     (ref: unified-product-template.ts:161-219) — one withColumns call
     over a process-memoized expression dict (fixed column names)."""
-    from ..exprcache import column_memo
+    return df.withColumns(_template_defaults())
 
-    def build() -> dict:
-        s = {c: js_or(F.col(c).cast("string"), d) for c, d in {
-            "unified_id": "",
-            "shop_type": "",
-            "title": "",
-            "brand": "",
-            "image_url": "",
-            "sales_unit_size": "",
-            "quantity_unit": "",
-            "promotion_type": "none",
-            "promotion_mechanism": "none",
-        }.items()}
-        # main_category: `|| null` — empty string becomes null
-        s["main_category"] = F.nullif(F.col("main_category"), F.lit(""))
-        s["quantity_amount"] = js_or_num(F.col("quantity_amount").cast("double"), 0.0)
-        s["price_before_bonus"] = js_or_num(
-            F.col("price_before_bonus").cast("double"), 0.0
-        )
-        s["current_price"] = js_or_num(F.col("current_price").cast("double"), 0.0)
-        s["is_promotion"] = F.coalesce(
-            F.col("is_promotion").cast("boolean"), F.lit(False)
-        )
-        s["is_active"] = F.coalesce(F.col("is_active").cast("boolean"), F.lit(True))
-        return s
 
-    return df.withColumns(column_memo(("template_defaults",), build))
+@cache
+def _calculate_fields_step2() -> dict:
+    """calculateFields steps 1-4 fanned out of the staged ``_pp`` /
+    ``_q`` structs into the unified columns — built once per process."""
+    mech = F.col("promotion_mechanism")
+    applicable2 = F.col("is_promotion") & mech.isNotNull() & (mech != "")
+    cf = F.col("_q.conversion_factor")
+    eff = F.when(applicable2, F.col("_pp.effective_unit_price")).otherwise(
+        F.col("parsed_promotion_effective_unit_price")
+    )
+    eff_truthy = eff.isNotNull() & ~F.isnan(eff) & (eff != 0)
+    metrics = F.when(
+        eff_truthy, discount_metrics(F.col("price_before_bonus"), eff)
+    ).otherwise(
+        discount_metrics(F.col("price_before_bonus"), F.col("current_price"))
+    )
+    return {
+        "parsed_promotion_effective_unit_price": eff,
+        "parsed_promotion_required_quantity": F.when(
+            applicable2, F.col("_pp.required_quantity")
+        ).otherwise(F.col("parsed_promotion_required_quantity")),
+        "parsed_promotion_total_price": F.when(
+            applicable2, F.col("_pp.total_price")
+        ).otherwise(F.col("parsed_promotion_total_price")),
+        "parsed_promotion_is_multi_purchase_required": F.when(
+            applicable2, F.col("_pp.is_multi_purchase_required")
+        ).otherwise(F.col("parsed_promotion_is_multi_purchase_required")),
+        "normalized_quantity_amount": F.col("_q.normalized_amount"),
+        "normalized_quantity_unit": F.col("_q.normalized_unit"),
+        "conversion_factor": cf,
+        "price_per_standard_unit": price_per_unit(F.col("price_before_bonus"), cf),
+        "current_price_per_standard_unit": F.when(
+            eff_truthy, price_per_unit(eff, cf)
+        ).otherwise(price_per_unit(F.col("current_price"), cf)),
+        "discount_absolute": F.when(
+            F.col("is_promotion"), metrics["amount"]
+        ).otherwise(F.col("discount_absolute")),
+        "discount_percentage": F.when(
+            F.col("is_promotion"), metrics["percentage"]
+        ).otherwise(F.col("discount_percentage")),
+    }
 
 
 def apply_calculate_fields(df: DataFrame) -> DataFrame:
@@ -107,9 +150,6 @@ def apply_calculate_fields(df: DataFrame) -> DataFrame:
     Two select passes: first materializes the heavy intermediate
     structs once, second fans them out into the unified columns.
     """
-    from ..exprcache import column_memo
-    from ..functions.promotions import standard_parsed_promo
-
     # _q via the staged-column cascade: bounds the ~150-alias
     # containment fold's worst case (an alias-map miss re-evaluates
     # the cleaned-string regex chain per element in the naive inline
@@ -117,53 +157,14 @@ def apply_calculate_fields(df: DataFrame) -> DataFrame:
     # join variant's second pass over the expensive upstream transform
     # lineage. Catalog-side fact queries use the join form
     # (with_standardized_quantity); composed pipelines use this one.
-    # All exprs reference fixed unified column names → built once per
-    # process (exprcache) — the naive rebuild is ~4000 Py4J calls.
+    # Every expression here references fixed unified column names, so
+    # each builder is a functools.cache function — the naive rebuild
+    # is ~4000 Py4J calls.
     step1 = df.withColumns({"_pp": standard_parsed_promo()})
     step1 = with_standardized_quantity_staged(
         step1, F.col("quantity_amount"), F.col("quantity_unit"), "_q"
     )
-
-    def build_step2() -> dict:
-        mech = F.col("promotion_mechanism")
-        applicable2 = F.col("is_promotion") & mech.isNotNull() & (mech != "")
-        cf = F.col("_q.conversion_factor")
-        eff = F.when(applicable2, F.col("_pp.effective_unit_price")).otherwise(
-            F.col("parsed_promotion_effective_unit_price")
-        )
-        eff_truthy = eff.isNotNull() & ~F.isnan(eff) & (eff != 0)
-        metrics = F.when(
-            eff_truthy, discount_metrics(F.col("price_before_bonus"), eff)
-        ).otherwise(
-            discount_metrics(F.col("price_before_bonus"), F.col("current_price"))
-        )
-        return {
-            "parsed_promotion_effective_unit_price": eff,
-            "parsed_promotion_required_quantity": F.when(
-                applicable2, F.col("_pp.required_quantity")
-            ).otherwise(F.col("parsed_promotion_required_quantity")),
-            "parsed_promotion_total_price": F.when(
-                applicable2, F.col("_pp.total_price")
-            ).otherwise(F.col("parsed_promotion_total_price")),
-            "parsed_promotion_is_multi_purchase_required": F.when(
-                applicable2, F.col("_pp.is_multi_purchase_required")
-            ).otherwise(F.col("parsed_promotion_is_multi_purchase_required")),
-            "normalized_quantity_amount": F.col("_q.normalized_amount"),
-            "normalized_quantity_unit": F.col("_q.normalized_unit"),
-            "conversion_factor": cf,
-            "price_per_standard_unit": price_per_unit(F.col("price_before_bonus"), cf),
-            "current_price_per_standard_unit": F.when(
-                eff_truthy, price_per_unit(eff, cf)
-            ).otherwise(price_per_unit(F.col("current_price"), cf)),
-            "discount_absolute": F.when(
-                F.col("is_promotion"), metrics["amount"]
-            ).otherwise(F.col("discount_absolute")),
-            "discount_percentage": F.when(
-                F.col("is_promotion"), metrics["percentage"]
-            ).otherwise(F.col("discount_percentage")),
-        }
-
-    step2 = step1.withColumns(column_memo(("acf_step2",), build_step2))
+    step2 = step1.withColumns(_calculate_fields_step2())
     return step2.drop("_pp", "_q")
 
 

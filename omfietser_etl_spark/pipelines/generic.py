@@ -20,6 +20,8 @@ point of the generic path is that the payload shape is unknown.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -66,17 +68,16 @@ def transform(raw: DataFrame, shop: str) -> DataFrame:
     row instead of the naive per-candidate `get_json_object` (which
     re-parses the JSON for each of the ~35 paths; at 100 TB that is
     the difference between 1× and 35× parse CPU on the scan stage)."""
-    from ..exprcache import column_memo
-
-    exprs = column_memo(("generic_transform", shop), lambda: _transform_exprs(shop))
+    exprs = _transform_exprs(shop)
     staged = raw.select("*", exprs["json"])
     staged = staged.withColumns(exprs["stage1"])
     return staged.select(*exprs["final"])
 
 
+@cache
 def _transform_exprs(shop: str) -> dict:
     """Generic-transform expressions over fixed extracted-key names —
-    built once per (process, shop) via exprcache."""
+    built once per (process, shop)."""
     # positional output names: JSON keys are case-SENSITIVE but Spark
     # column resolution is not ('sku' vs 'SKU' would collide)
     json_gen = F.json_tuple(F.col("raw_data"), *_JSON_KEYS).alias(

@@ -8,6 +8,8 @@ quantity :317-330.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,17 +36,16 @@ def skip_filter(raw: DataFrame) -> DataFrame:
 
 
 def transform(raw: DataFrame) -> DataFrame:
-    from ..exprcache import column_memo
-
-    exprs = column_memo(("jumbo_transform",), _transform_exprs)
+    exprs = _transform_exprs()
     staged = raw.withColumns(exprs["stage1"])
     staged = staged.withColumn("_cur", exprs["cur"])
     return staged.select(*exprs["final"])
 
 
+@cache
 def _transform_exprs() -> list:
     """All transform expressions over the fixed JUMBO schema — built
-    once per process (exprcache)."""
+    once per process."""
     p = F.col("product")
 
     # flatten promotions[].tags[].text, joined with '; ' (jumbo.ts:133-142)

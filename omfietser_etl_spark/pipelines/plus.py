@@ -8,6 +8,8 @@ transform :86-255, required fields :269-289, quantity cascade
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,17 +29,16 @@ def skip_filter(raw: DataFrame) -> DataFrame:
 
 
 def transform(raw: DataFrame) -> DataFrame:
-    from ..exprcache import column_memo
-
-    exprs = column_memo(("plus_transform",), _transform_exprs)
+    exprs = _transform_exprs()
     staged = raw.withColumns(exprs["stage1"])
     staged = staged.withColumn("_cur", exprs["cur"])
     return staged.select(*exprs["final"])
 
 
+@cache
 def _transform_exprs() -> dict:
     """All transform expressions over the fixed PLUS schema / staged
-    column names — built once per process (exprcache): the tree is
+    column names — built once per process: the tree is
     thousands of Py4J calls and identical on every invocation."""
     p = F.col("PLP_Str")
 

@@ -88,7 +88,7 @@ def run_file_mode(
         err_obs = Observation()
         write_errors(
             errors.observe(err_obs, F.count(F.lit(1)).alias("n")),
-            os.path.join(output_dir, "errors"),
+            os.path.join(output_dir, "errors", shop),
         )
         n_errors = int(err_obs.get["n"])
         n_corrupt = corrupt.count()

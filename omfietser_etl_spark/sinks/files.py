@@ -67,8 +67,9 @@ def write_unified_json(df: DataFrame, out_dir: str, shop: str, run_ts: str) -> s
 
 
 def write_errors(errors: DataFrame, path: str) -> None:
-    """K4 dead-letter append sink."""
-    errors.write.mode("append").parquet(path)
+    """K4 dead-letter sink: one shop's error rows, overwriting the
+    previous run's (re-running a day leaves the same rows)."""
+    errors.write.mode("overwrite").parquet(path)
 
 
 def write_reports(unified: DataFrame, out_dir: str, shops: list[str]) -> None:
@@ -101,7 +102,6 @@ def write_stats_report(
     skipped: int,
     duration_s: float,
     run_ts: str,
-    deduped: int = 0,
 ) -> dict:
     """Reference-shaped per-shop stats report (K6 companion):
     mirrors `processors/base.ts:669-705` writeStatsReport — rates as
@@ -124,7 +124,7 @@ def write_stats_report(
             "skipped": skipped,
             # the reference counts in-run dedup drops (base.ts:680);
             # 0 in file mode, where the engine has no dedup stage
-            "deduped": deduped,
+            "deduped": 0,
             "successRate": f"{success * 100 / denom:.2f}%",
             "failureRate": f"{failed * 100 / denom:.2f}%",
             "skipRate": f"{skipped * 100 / denom:.2f}%",

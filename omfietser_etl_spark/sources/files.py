@@ -37,8 +37,8 @@ def read_shop_json(
     spark: SparkSession, path: str, shop: str, multi_line: bool = True
 ) -> tuple[DataFrame, DataFrame]:
     """Read one shop's raw JSON (array file or NDJSON) → (good rows,
-    corrupt rows). Corrupt rows carry the raw text for the error sink
-    (K4 dead letter)."""
+    corrupt rows). Corrupt rows carry the raw text; ``run_file_mode``
+    counts them as skipped but does not write them to the error sink."""
     # StructType.add mutates in place — build a fresh copy instead
     schema = T.StructType(
         list(SHOP_SCHEMAS[shop].fields)

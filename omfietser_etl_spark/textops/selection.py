@@ -87,9 +87,9 @@ def ilog2_q_expr(xexpr: str, q: int = DSIR_Q, f: int = DSIR_F) -> str:
     higher-order ``aggregate`` over ``sequence(1, q)``. The input and
     p are let-bound through single-element ``transform`` lambdas, so
     iterated squaring is a VALUE loop — never an exponentially
-    re-expanded Column tree (the exprcache lesson), and never a
-    driver-side distinct-value collect (the ta10 workaround this
-    primitive retires for new operators). Property-tested equal to
+    re-expanded Column tree (every operator node is one Py4J call to
+    build), and never a driver-side distinct-value collect (the ta10
+    workaround this primitive retires for new operators). Property-tested equal to
     the Python/DuckDB twins in tests/test_selection.py.
     """
     two_f1 = 1 << (f + 1)

@@ -347,3 +347,30 @@ def test_plus_null_category_stays_null(spark):
         got = {r["unified_id"]: r["main_category"] for r in unified.collect()}
         assert got == {"cat": "Zuivel, eieren, boter", "nocat": None}
         assert errors.count() == 0
+
+
+def test_column_builders_are_built_once_per_process(spark):
+    """Every Column builder over fixed column names is memoized: with
+    two shops' pipelines built and one of them rebuilt, the shared
+    finish's builders and the rebuilt shop's transform builder each
+    miss exactly once. Building the trees afresh per pipeline costs
+    thousands of Py4J calls per builder."""
+    from omfietser_etl_spark.functions import promotions, quantities
+    from omfietser_etl_spark.pipelines import common
+
+    builders = [
+        common._template_defaults,
+        common._calculate_fields_step2,
+        promotions.standard_parsed_promo,
+        quantities._staged_exprs,
+        ah._transform_exprs,
+    ]
+    for b in builders:
+        b.cache_clear()
+    ah.pipeline(spark.createDataFrame([_ah_row()], AH_SCHEMA))
+    jumbo.pipeline(spark.createDataFrame([], JUMBO_SCHEMA))
+    ah.pipeline(spark.createDataFrame([_ah_row()], AH_SCHEMA))
+    for b in builders:
+        info = b.cache_info()
+        assert (info.misses, info.currsize) == (1, 1), (b.__name__, info)
+        assert info.hits >= 1, (b.__name__, info)

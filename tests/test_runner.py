@@ -3,6 +3,7 @@ error dead-letter + reports out, with corrupt-record capture."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -209,6 +210,38 @@ def test_run_file_mode_generic_kruidvat(spark, tmp_path):
     assert k2["main_category"] == "Drogisterij"
     assert k2["is_promotion"] and k2["discount_percentage"] == 25.0
     assert k2["price_per_standard_unit"] == 4.0
+
+
+def _error_rows(spark, out: str) -> list[tuple]:
+    """Every error row under the output's errors dir, whatever its
+    layout, as a sorted list."""
+    files = glob.glob(os.path.join(out, "errors", "**", "*.parquet"), recursive=True)
+    return sorted((tuple(r) for r in spark.read.parquet(*files).collect()), key=repr)
+
+
+def test_run_file_mode_rerun_leaves_the_same_errors(spark, tmp_path):
+    """Re-running a day into the same output dir leaves the same error
+    rows as one run: each shop's errors overwrite its own dir instead
+    of appending to a shared one."""
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    os.makedirs(inp)
+    with open(inp / "ah_products.json", "w") as f:
+        # a bonus row with no before-bonus price and no priced label
+        # is a transform error (ah.ts:200-267)
+        json.dump(AH_ROWS + [{**AH_ROWS[0], "webshopId": 13, "isBonus": True,
+                              "priceBeforeBonus": None, "currentPrice": 2.0}], f)
+    with open(inp / "kruidvat_products.json", "w") as f:
+        f.write(json.dumps({"name": "Naamloos", "price": "1.00"}) + "\n")
+
+    first = run_file_mode(spark, str(inp), out, shops=["ah", "kruidvat"])
+    assert first["total_errors"] == 2
+    once = _error_rows(spark, out)
+    assert {(r[1], r[2]) for r in once} == {
+        ("AH", "missing_promo_price"),
+        ("KRUIDVAT", "missing_external_id"),
+    }
+    assert run_file_mode(spark, str(inp), out, shops=["ah", "kruidvat"]) == first
+    assert _error_rows(spark, out) == once
 
 
 def test_write_unified_json_bounded(spark, tmp_path, monkeypatch):
